@@ -1,17 +1,25 @@
-"""Superstep checkpointing with resume (north_rule requirement).
+"""The superstep loop with checkpointing and resume (north_rule requirement).
 
-Every iterative kernel writes its state DataFrame to
-``<dir>/iter=NNNN/`` (Parquet, atomic via Spark's _SUCCESS marker) plus a
-``counters.json`` sidecar recording per-iteration metrics (rows, delta,
-wall time, partition count).  ``latest()`` finds the newest COMPLETE
-iteration so a killed run resumes mid-iteration with exact state — the
-Spark-native substitute for the reference's single-process in-memory
-loop (motive has no resume; DiskDGraph README.md:69-83 is its closest
-analogue: state that survives the heap).
+``CheckpointManager.run`` is the one loop every iterative kernel
+(PageRank and its variants, components, label propagation) drives: the
+kernel supplies a step function and, optionally, a convergence probe;
+the loop owns resume, lineage truncation, release of superseded state,
+the probe and the per-superstep counters.
 
-Writing parquet (not ``localCheckpoint``) both truncates lineage — the
-iterated self-join plan would otherwise grow without bound — and makes
-the state durable across driver restarts, which localCheckpoint is not.
+Each superstep's state is written to ``<dir>/iter=NNNN/`` (Parquet,
+atomic via Spark's _SUCCESS marker) plus a ``counters.json`` sidecar
+recording per-iteration metrics (rows, delta, wall time, partition
+count).  ``latest()`` finds the newest COMPLETE iteration so a killed
+run resumes mid-iteration with exact state — the Spark-native substitute
+for the reference's single-process in-memory loop (motive has no resume;
+DiskDGraph README.md:69-83 is its closest analogue: state that survives
+the heap).  Without a dir the state is an eager ``localCheckpoint``.
+
+Either form truncates lineage every superstep: letting the iterated-join
+plan grow makes Catalyst analysis time explode superlinearly (measured:
+2s/superstep at iter 2 → 140s at iter 8 with a cadence of 4 on the sf0.1
+graph).  Parquet also makes the state durable across driver restarts,
+which localCheckpoint is not.
 """
 
 from __future__ import annotations
@@ -19,6 +27,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,15 +38,9 @@ class CheckpointManager:
     spark: SparkSession
     base_dir: str | None
     counters: list[dict] = field(default_factory=list)
-    # lineage-truncation cadence when base_dir is None.  Keep at 1: letting
-    # the iterated-join plan grow makes Catalyst analysis time explode
-    # superlinearly (measured: 2s/superstep at iter 2 → 140s at iter 8
-    # with cadence 4 on the sf0.1 graph).
-    local_every: int = 1
-    # last two ephemeral states: generation i-2 is released when
-    # generation i is saved (two-superstep lag — kernels may still read
-    # the immediately-previous state after save, e.g. the L1-delta check)
-    _hist: list[tuple[DataFrame, str]] = field(default_factory=list)
+    # what ``cache`` holds for the running superstep; freed once its
+    # state is saved
+    _step_cached: list[DataFrame] = field(default_factory=list)
 
     def _iter_dir(self, i: int) -> str:
         return os.path.join(self.base_dir, f"iter={i:04d}")
@@ -56,82 +59,97 @@ class CheckpointManager:
         )
         return its[-1] if its else None
 
-    def save(self, df: DataFrame, iteration: int, **metrics) -> DataFrame:
+    def run(
+        self,
+        state: DataFrame,
+        step: Callable[[DataFrame], DataFrame],
+        n_iter: int,
+        resume: bool = False,
+        probe: Callable[[DataFrame, DataFrame], float] | None = None,
+        tol: float | None = None,
+    ) -> DataFrame:
+        """Run supersteps ``0 .. n_iter-1`` from ``state``; return the last
+        saved state.
+
+        ``step(state)`` builds the next state from the previous one; the
+        loop saves it (lineage-free) and releases the superseded state.  With ``resume`` and a dir, the loop starts
+        after the newest complete iteration, from its saved state.
+        ``probe(new, old)`` runs after each save; its value is recorded
+        as that superstep's ``delta`` and the loop stops once it drops
+        below ``tol``.
+        """
+        start = 0
+        last = self.latest() if resume else None
+        if last is not None:
+            state, start = self.load(last), last + 1
+        # only localCheckpoint states made here hold blocks to free
+        owned = False
+        for i in range(start, n_iter):
+            t0 = time.time()
+            new = self.save(step(state), i)
+            self._drop_step_cached()
+            delta = probe(new, state) if probe is not None else None
+            if owned:
+                self._release(state)
+            state, owned = new, self.base_dir is None
+            rec = self.counters[-1]
+            rec["superstep_sec"] = round(time.time() - t0, 3)
+            if delta is not None:
+                rec["delta"] = delta
+            if self.base_dir is not None:
+                with open(os.path.join(self.base_dir, "counters.json"), "w") as f:
+                    json.dump(self.counters, f, indent=1)
+            if delta is not None and delta < tol:
+                break
+        self._drop_step_cached()  # a cached initial state no superstep read
+        return state
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Cache a DataFrame the current (or first) superstep reads more
+        than once; it is freed as soon as that superstep's state is
+        saved."""
+        df = df.cache()
+        self._step_cached.append(df)
+        return df
+
+    def _drop_step_cached(self) -> None:
+        for df in self._step_cached:
+            df.unpersist()
+        self._step_cached.clear()
+
+    def save(self, df: DataFrame, iteration: int) -> DataFrame:
         """Write state for ``iteration``; return the re-read (lineage-free)
-        DataFrame.  When no base_dir is configured, fall back to
+        DataFrame.  When no base_dir is configured, fall back to an eager
         localCheckpoint (tests / ephemeral runs)."""
         t0 = time.time()
         if self.base_dir is None:
-            # ephemeral mode: cache + materialize; truncate lineage with a
-            # localCheckpoint only every ``local_every`` supersteps so short
-            # runs don't churn block files; drop the superseded state.
-            if (iteration + 1) % self.local_every == 0:
-                out = df.localCheckpoint(eager=True)  # materializes; no extra count
-                kind, n = "ckpt", -1
-            else:
-                out = df.cache()
-                kind = "cache"
-                n = out.count()
-            self._hist.append((out, kind))
-            if len(self._hist) > 2:
-                old, old_kind = self._hist.pop(0)
-                # a popped CACHE gen is always releasable (its lineage
-                # stays intact, so a cached successor can still recompute
-                # through it on eviction); a popped localCheckpoint's
-                # blocks ARE its data, so release those only when the
-                # successor is itself lineage-free.
-                if old_kind == "cache" or self._hist[0][1] == "ckpt":
-                    self._release(old, old_kind)
+            out = df.localCheckpoint(eager=True)  # materializes; no extra count
+            n = -1
         else:
             path = self._iter_dir(iteration)
             df.write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)
             n = out.count()
-        rec = {
+        self.counters.append({
             "iteration": iteration,
             "rows": n,
             "partitions": out.rdd.getNumPartitions(),
             "write_sec": round(time.time() - t0, 3),
-            **metrics,
-        }
-        self.counters.append(rec)
-        if self.base_dir is not None:
-            with open(os.path.join(self.base_dir, "counters.json"), "w") as f:
-                json.dump(self.counters, f, indent=1)
+        })
         return out
 
     @staticmethod
-    def _release(df: DataFrame, kind: str) -> None:
-        """Explicitly free a superseded ephemeral state.  For a
-        localCheckpoint the blocks belong to the LogicalRDD's internal RDD
-        (not the CacheManager), so ``df.unpersist()`` is a no-op; reach the
-        RDD through the analyzed plan instead.  Without this, long
-        iterative runs accumulate checkpoint blocks until the driver GC +
-        ContextCleaner catch up (verified: storage grows monotonically)."""
+    def _release(df: DataFrame) -> None:
+        """Explicitly free a superseded localCheckpoint state.  Its blocks
+        belong to the LogicalRDD's internal RDD (not the CacheManager), so
+        ``df.unpersist()`` is a no-op; reach the RDD through the analyzed
+        plan instead.  Without this, long iterative runs accumulate
+        checkpoint blocks until the driver GC + ContextCleaner catch up
+        (verified: storage grows monotonically)."""
         try:
-            if kind == "cache":
-                df.unpersist()
-            else:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         except Exception:  # noqa: BLE001 — freeing is best-effort
             pass
 
-    def annotate(self, **metrics) -> None:
-        """Attach metrics to the latest superstep record (re-flushes the
-        counters sidecar so on-disk state is never missing fields)."""
-        if not self.counters:
-            return
-        self.counters[-1].update(metrics)
-        if self.base_dir is not None:
-            with open(os.path.join(self.base_dir, "counters.json"), "w") as f:
-                json.dump(self.counters, f, indent=1)
-
     def load(self, iteration: int) -> DataFrame:
         return self.spark.read.parquet(self._iter_dir(iteration))
-
-    def load_counters(self) -> list[dict]:
-        p = os.path.join(self.base_dir, "counters.json")
-        if self.base_dir and os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return []

@@ -12,11 +12,7 @@ range-ish blocks by (src, salt).  Properties:
 * the hash(src)-partitioned variant makes iterative kernels'
   state ⋈ adjacency join exchange-free (pagerank/CC/LP strategy="csr" —
   the plan behind the ≥0.8 measured scaling efficiency in
-  BENCH/BASELINE.md);
-* ``build_csr_2d``/``gather_sum_2d`` add block-aligned 2D placement
-  (dst-block split adjacency): the gather's contribution shuffle is
-  bounded by ~|V| instead of min(|E|, P*|V|), the right trade above
-  average degree 2*sqrt(P) (dense-graph, 1000-executor regime).
+  BENCH/BASELINE.md).
 
 The reference's analogue is the MapDB-backed DiskDGraph (Run.java:76-78,
 README.md:69-83) — disk-resident adjacency; Parquet + this layout is the
@@ -116,81 +112,4 @@ def gather_sum(csr: DataFrame, values: DataFrame) -> DataFrame:
         )
         .drop("_ignored")
     )
-    return contrib.groupBy("id").agg(F.sum("value").alias("gathered"))
-
-
-# --- 2D (block-aligned) placement ------------------------------------------
-
-
-def build_csr_2d(
-    edges: DataFrame,
-    nb_dst: int,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """2D-partitioned adjacency: each src's out-neighborhood is split by
-    DESTINATION block (``dst_block = pmod(xxhash64(dst), nb_dst)``) and
-    the table is partitioned by dst_block.
-
-    (dst_block int, src long, dst_list array<long>, deg_part int,
-    out_deg long)
-
-    Why: in the 1D gather the contribution shuffle moves up to
-    min(|E|, P*|V|) rows because a map partition's edges target
-    arbitrary destinations, so map-side partial aggregation barely
-    compacts.  With dst-block alignment every map task emits
-    contributions confined to its blocks' vertex range, so partial
-    aggregation caps the shuffle at ~|V| rows total, at the price of
-    replicating the |V|-row value table nb_dst times into the join
-    (2|V|*sqrt(P) < |E| exactly when the average degree exceeds
-    2*sqrt(P) — the dense web/dependency-graph regime at 1000-executor
-    scale; below that the 1D plan wins and stays the default).
-    """
-    spark = edges.sparkSession
-    if n_blocks is None:
-        n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    from pyspark.sql import Window
-
-    wc = Window.partitionBy("src")
-    e = edges.select(
-        "src", "dst", F.pmod(F.xxhash64("dst"), F.lit(nb_dst)).cast("int").alias(
-            "dst_block"
-        )
-    )
-    csr = (
-        e.withColumn("out_deg", F.count(F.lit(1)).over(wc).cast("long"))
-        .groupBy("dst_block", "src")
-        .agg(
-            F.array_sort(F.collect_list("dst")).alias("dst_list"),
-            F.first("out_deg").alias("out_deg"),
-        )
-        .withColumn("deg_part", F.size("dst_list"))
-        .select("dst_block", "src", "dst_list", "deg_part", "out_deg")
-    )
-    return csr.repartition(n_blocks, "dst_block")
-
-
-def gather_sum_2d(csr2d: DataFrame, values: DataFrame, nb_dst: int) -> DataFrame:
-    """2D gather: sum of ``values.value`` over in-neighbors, with the
-    contribution aggregation block-aligned.
-
-    The value table is replicated once per dst_block (the 2|V|*sqrt(P)
-    term) and shuffle-hash-joined on (src, dst_block) — the csr side,
-    partitioned by dst_block, never moves (hash(dst_block) satisfies the
-    join's clustered distribution on a key subset).  The explode lands
-    only destinations inside the task's blocks, so the partial aggregate
-    compacts to ~distinct-dst-per-block before the final exchange.
-    """
-    spark = csr2d.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    vals_repl = (
-        values.withColumn(
-            "dst_block", F.explode(F.sequence(F.lit(0), F.lit(nb_dst - 1)))
-        )
-        .withColumn("dst_block", F.col("dst_block").cast("int"))
-        .repartition(npart, "dst_block")
-    )
-    contrib = csr2d.join(
-        vals_repl.hint("shuffle_hash"),
-        on=[csr2d.src == vals_repl.id, csr2d.dst_block == vals_repl.dst_block],
-    ).select(F.explode("dst_list").alias("id"), F.col("value"))
     return contrib.groupBy("id").agg(F.sum("value").alias("gathered"))

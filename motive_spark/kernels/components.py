@@ -14,13 +14,16 @@ Scale notes:
     Components in MapReduce and Beyond", SoCC'14 — public literature);
   * the symmetrized edge table is partitioned once on the gather key and
     cached; labels (1 row/vertex) are the only per-round shuffle;
-  * the label side is BROADCAST only below BROADCAST_MAX_VERTICES
-    (``strategy="auto"``, same switch as pagerank.py) — above that, a
-    per-superstep |V|-row broadcast would serialize on the hash-relation
-    build and OOM executors at billion-vertex scale; the copartition
-    path shuffle-hash-joins the label table against the stationary edge
-    table instead;
-  * per-superstep Parquet checkpoint → resume + lineage truncation.
+  * two plans, the pagerank.py switch (``strategy="auto"``; any other
+    value than ``auto``/``broadcast``/``csr`` raises ValueError): the
+    label side is BROADCAST only below BROADCAST_MAX_VERTICES — above
+    that, a per-superstep |V|-row broadcast would serialize on the
+    hash-relation build and OOM executors at billion-vertex scale, so
+    the ``csr`` plan gathers labels over salted CSR blocks of the
+    symmetric adjacency with one exchange per superstep;
+  * the loop is ``CheckpointManager.run``: per-superstep Parquet
+    checkpoint (or localCheckpoint) → resume + lineage truncation, with
+    the changed-label count as its convergence probe.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from motive_spark.checkpoint import CheckpointManager
-from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES
+from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES, check_strategy
 
 
 def connected_components(
@@ -54,12 +57,13 @@ def connected_components(
     edge side of every superstep join reuses the bucket layout with no
     exchange.
     """
+    check_strategy(strategy, "connected_components")
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # partitioned on dst once: the per-superstep gather joins on sym.dst,
-    # so in copartition mode the edge side never moves; the auto-switch
-    # vertex count reads this same cache (no second symmetrize pass)
+    # so the edge side never moves; the auto-switch vertex count reads
+    # this same cache (no second symmetrize pass)
     sym = edges.select("src", "dst")
     if not pre_partitioned:
         sym = (
@@ -78,8 +82,6 @@ def connected_components(
     verts = sym.select(F.col("src").alias("id")).distinct()
     if strategy == "auto":
         n = verts.count()
-        # csr above the broadcast threshold: single-exchange superstep
-        # (measured strictly better than copartition at scale)
         strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "csr"
 
     def labels_side(df):
@@ -99,16 +101,10 @@ def connected_components(
         csr.count()
 
     ckpt = CheckpointManager(spark, checkpoint_dir)
-    labels = verts.select("id", F.col("id").alias("component"))
-    start = 0
-    if resume and checkpoint_dir is not None:
-        last = ckpt.latest()
-        if last is not None:
-            labels = ckpt.load(last)
-            start = last + 1
 
-    n_rounds = fixed_iters if fixed_iters is not None else max_iter
-    for i in range(start, n_rounds):
+    def step(labels: DataFrame) -> DataFrame:
+        # the saved state also carries the previous label as `old`
+        labels = labels.select("id", "component")
         # neighbor-min: min label over {self} ∪ N(v)
         # the label side moves — the edge table never does (100-TB side)
         if strategy == "csr":
@@ -116,7 +112,7 @@ def connected_components(
                 labels.hint("shuffle_hash"), on=[labels.id == csr.src]
             ).select(F.explode("dst_list").alias("id"), "component")
             new_labels = (
-                cand.unionByName(labels.select("id", "component"))
+                cand.unionByName(labels)
                 .groupBy("id")
                 .agg(F.min("component").alias("component"))
             )
@@ -140,13 +136,12 @@ def connected_components(
                     F.col("component").alias("old"),
                 )
             )
-        pre_jump = None
         if big_star:
             # pointer-jumping shortcut: label(v) <- label(label(v)) —
             # collapses label chains exponentially, so rounds ~ O(log
             # diameter) instead of O(diameter).  Cache first: the jump is a
             # self-join and must not recompute the neighbor-min pass twice.
-            new_labels = pre_jump = new_labels.cache()
+            new_labels = ckpt.cache(new_labels)
             carry_old = (
                 [F.col("l.old").alias("old")]
                 if strategy != "csr"
@@ -182,17 +177,20 @@ def connected_components(
                 ),
                 on="id",
             )
-        new_labels = ckpt.save(new_labels, i)
-        if pre_jump is not None:
-            pre_jump.unpersist()
-        if fixed_iters is None:
-            changed = new_labels.where(F.col("component") != F.col("old")).count()
-            ckpt.annotate(changed=changed)
-            labels = new_labels.select("id", "component")
-            if changed == 0:
-                break
-        else:
-            labels = new_labels.select("id", "component")
+        return new_labels
+
+    def changed(new: DataFrame, _old: DataFrame) -> int:
+        return new.where(F.col("component") != F.col("old")).count()
+
+    labels = ckpt.run(
+        verts.select("id", F.col("id").alias("component")),
+        step,
+        fixed_iters if fixed_iters is not None else max_iter,
+        resume=resume,
+        # stop once no label changed (fixed_iters: no probe at all)
+        probe=changed if fixed_iters is None else None,
+        tol=1,
+    )
     sym.unpersist()
     if csr is not None:
         csr.unpersist()

@@ -8,12 +8,15 @@ ANSI-SQL expressible for the DuckDB oracle).
 Gather-scatter shape identical to PageRank: labels ⋈ edges on one side,
 groupBy the other, argmax via a single struct-max aggregation (no window
 over a big partition).  Edge table partitioned once and cached; labels
-are the only per-round shuffle; Parquet checkpoint per superstep.
+are the only per-round shuffle.  The loop is ``CheckpointManager.run``
+(Parquet checkpoint or localCheckpoint per superstep, resume).
 
-The label side is BROADCAST only below BROADCAST_MAX_VERTICES
-(``strategy="auto"``, the pagerank.py switch) — above that the
-copartition path shuffle-hash-joins the |V|-row label table against the
-stationary edge table, so no per-superstep giant hash-relation build.
+``label_propagation`` has the pagerank.py switch (``strategy="auto"``;
+any other value than ``auto``/``broadcast``/``csr`` raises ValueError):
+the label side is BROADCAST only below BROADCAST_MAX_VERTICES — above
+that the ``csr`` plan gathers labels over salted CSR blocks, so no
+per-superstep giant hash-relation build.  ``seeded_label_propagation``
+keeps a shuffle-hash ``copartition`` plan above the threshold.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from motive_spark.checkpoint import CheckpointManager
-from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES
+from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES, check_strategy
 
 
 def label_propagation(
@@ -42,6 +45,7 @@ def label_propagation(
     superstep join reuses the bucket layout exchange-free
     (components.py contract).
     """
+    check_strategy(strategy, "label_propagation")
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -65,13 +69,7 @@ def label_propagation(
     verts = sym.select(F.col("src").alias("id")).distinct()
     if strategy == "auto":
         n = verts.count()
-        # csr above the broadcast threshold: fewest exchanges per
-        # superstep (measured strictly better than copartition at scale)
         strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "csr"
-
-    def labels_side(df):
-        """The moving |V|-row side of each per-superstep join."""
-        return F.broadcast(df) if strategy == "broadcast" else df.hint("shuffle_hash")
 
     csr = None
     if strategy == "csr":
@@ -83,16 +81,7 @@ def label_propagation(
         csr = build_csr(sym, n_blocks=npart, partition_by="src").cache()
         csr.count()
 
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-    labels = verts.select("id", F.col("id").alias("label"))
-    start = 0
-    if resume and checkpoint_dir is not None:
-        last = ckpt.latest()
-        if last is not None:
-            labels = ckpt.load(last)
-            start = last + 1
-
-    for i in range(start, iters):
+    def step(labels: DataFrame) -> DataFrame:
         # the label side moves — the edge table never does (100-TB side)
         if strategy == "csr":
             votes = (
@@ -103,7 +92,7 @@ def label_propagation(
             )
         else:
             votes = (
-                sym.join(labels_side(labels), on=[sym.dst == labels.id])
+                sym.join(F.broadcast(labels), on=[sym.dst == labels.id])
                 .groupBy(F.col("src").alias("id"), "label")
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
@@ -117,12 +106,16 @@ def label_propagation(
         # total).  The id universe comes from the materialized state —
         # identical to verts by construction — so no superstep recomputes
         # the verts distinct or pays a second join (guide §2.4)
-        new_labels = (
+        return (
             labels.select("id", F.col("label").alias("old"))
             .join(new_labels, on="id", how="left")
             .select("id", F.coalesce("label", "old").alias("label"))
+            .repartition(npart, "id")
         )
-        labels = ckpt.save(new_labels.repartition(npart, "id"), i)
+
+    labels = CheckpointManager(spark, checkpoint_dir).run(
+        verts.select("id", F.col("id").alias("label")), step, iters, resume=resume
+    )
     sym.unpersist()
     if csr is not None:
         csr.unpersist()
@@ -141,8 +134,9 @@ def seeded_label_propagation(
     (ties to the smallest label; vertices no labeled vertex has reached
     yet stay NULL).  Returns (id, label) after exactly ``iters`` rounds.
 
-    Same physical shape as label_propagation's broadcast/copartition
-    paths: stationary symmetric edge cache, moving label table, lineage
+    Same physical shape as label_propagation's broadcast plan, with a
+    shuffle-hash ``copartition`` plan above BROADCAST_MAX_VERTICES:
+    stationary symmetric edge cache, moving label table, lineage
     truncation per round.
     """
     spark = edges.sparkSession
@@ -167,13 +161,11 @@ def seeded_label_propagation(
     seed_tab = seeds.select(
         "id", F.col("label").cast("long").alias("seed_label")
     ).cache()
+
     # the iterated state carries the stationary clamp column, so no
     # round re-joins seed_tab or recomputes the verts distinct (guide
-    # §2.4); the update expression is unchanged
-    state = verts.join(seed_tab, on="id", how="left").select(
-        "id", "seed_label", F.col("seed_label").alias("label")
-    )
-    for _ in range(iters):
+    # §2.4)
+    def step(state: DataFrame) -> DataFrame:
         lab = state.where(F.col("label").isNotNull()).select(
             F.col("id").alias("nbr"), "label"
         )
@@ -191,7 +183,7 @@ def seeded_label_propagation(
             )
             .select("id", F.col("b.label").alias("win"))
         )
-        state = (
+        return (
             state.select(
                 "id", "seed_label", F.col("label").alias("old")
             )
@@ -201,8 +193,15 @@ def seeded_label_propagation(
                 "seed_label",
                 F.coalesce("seed_label", "win", "old").alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    state = CheckpointManager(spark, None).run(
+        verts.join(seed_tab, on="id", how="left").select(
+            "id", "seed_label", F.col("seed_label").alias("label")
+        ),
+        step,
+        iters,
+    )
     sym.unpersist()
     seed_tab.unpersist()
     return state.select("id", "label")

@@ -9,19 +9,17 @@ where dangling = sum of r(u) over vertices with outdeg 0.  This matches
 networkx.pagerank's per-iteration update, so per-vertex scores converge
 allclose(1e-6) against the reference power iteration (BASELINE.json).
 
-Two physical strategies, chosen by |V| (``strategy="auto"``):
+Two physical strategies, chosen by |V| (``strategy="auto"``; any other
+value than ``auto``/``broadcast``/``csr`` raises ValueError).  The same
+switch serves connected_components and label_propagation:
 
-* ``broadcast`` (|V| small): ranks broadcast against the stationary edge
-  table — zero edge movement, one hash-relation build per superstep.
-  The explicit hint matters: without it Spark happily broadcasts a
-  small-SF *edge* table instead, rebuilding a multi-million-entry hash
-  relation every superstep (measured 5x slower at sf0.1).
-* ``copartition`` (|V| large): edges are hash-partitioned once on src
-  and cached with out_deg attached; every superstep shuffle-hash-joins
-  the (small) rank table against them — the edge table NEVER moves, only
-  ranks shuffle.  Broadcast would serialize on building a giant hash
-  relation (measured: negative scaling at |V|=1M).
-* ``csr`` (explicit): the salted CSR block layout (graph.csr), hash(src)
+* ``broadcast`` (|V| <= BROADCAST_MAX_VERTICES): ranks broadcast against
+  the stationary edge table — zero edge movement, one hash-relation
+  build per superstep.  The explicit hint matters: without it Spark
+  happily broadcasts a small-SF *edge* table instead, rebuilding a
+  multi-million-entry hash relation every superstep (measured 5x slower
+  at sf0.1).
+* ``csr`` (above it): the salted CSR block layout (graph.csr), hash(src)
   partitioned, ONE superstep exchange total.  The rank ⋈ csr join is
   exchange-free (ranks leave the previous superstep's aggregation
   already hash(id)-partitioned, and localCheckpoint preserves output
@@ -30,12 +28,17 @@ Two physical strategies, chosen by |V| (``strategy="auto"``):
   vertex INTO the same aggregation instead of a reinstatement join.
   Per superstep: 1 shuffle (the contribution sum), ~|V| probe rows
   instead of |E| join rows, and per-row neighbor arrays bounded by
-  salt_chunk for hubs.
+  salt_chunk for hubs.  It measured 2.8x faster supersteps than a
+  shuffle-hash plan over a stationary edge table and 1.8x faster than
+  a 2-D block-aligned gather (BENCH/BASELINE.md).
 
-All paths truncate lineage every superstep (Parquet when a checkpoint
-dir is given — resumable mid-iteration per north_rule — else
-localCheckpoint; letting the iterated-join plan grow makes Catalyst
-analysis explode superlinearly: 2s/superstep at iter 2 → 140s at iter 8).
+The weighted and personalized variants keep the shuffle-hash
+``copartition`` plan above the threshold.
+
+Every loop here runs on ``CheckpointManager.run``: per-superstep lineage
+truncation (Parquet when a checkpoint dir is given — resumable
+mid-iteration per north_rule — else localCheckpoint), release of
+superseded state, and the shared L1 convergence probe ``l1_delta``.
 """
 
 from __future__ import annotations
@@ -48,6 +51,26 @@ from motive_spark.checkpoint import CheckpointManager
 # above this vertex count, broadcasting the rank table each superstep is
 # slower than shuffling it (hash-relation build is single-threaded)
 BROADCAST_MAX_VERTICES = 2_000_000
+
+
+def check_strategy(strategy: str, kernel: str) -> None:
+    """pagerank, connected_components and label_propagation have exactly
+    the two plans ``auto`` chooses between."""
+    if strategy not in ("auto", "broadcast", "csr"):
+        raise ValueError(
+            f"{kernel}: strategy must be 'auto', 'broadcast' or 'csr', "
+            f"got {strategy!r}"
+        )
+
+
+def l1_delta(new: DataFrame, old: DataFrame) -> float:
+    """Convergence probe of the PageRank family: sum of |rank - old rank|."""
+    return (
+        new.select("id", "rank")
+        .join(old.select("id", F.col("rank").alias("old")), on="id")
+        .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
+        .collect()[0][0]
+    )
 
 
 def pagerank(
@@ -71,10 +94,10 @@ def pagerank(
     hash-distributed on ``src`` — e.g. a table written with
     ``tables.write_bucketed(..., ["src"], n_buckets)`` where n_buckets
     equals ``spark.sql.shuffle.partitions`` — so the kernel skips its
-    own ``repartition(npart, "src")`` and trusts the layout: with the
-    copartition strategy the stationary edge side of every superstep
-    join then has ZERO exchanges end to end (bucket scan feeds the
-    shuffle-hash join directly; only the |V|-row rank table moves).
+    own ``repartition(npart, "src")`` and trusts the layout: the
+    stationary edge side then never exchanges on src, end to end (the
+    bucket scan feeds the edge cache and the CSR build directly; only
+    the |V|-row rank table and the contribution aggregation move).
     Repeated kernel runs over the same 100-TB bucketed table skip the
     partitioning pass every time.  ``plans_out`` (a list) receives the
     first superstep's executed-plan string for plan tests.
@@ -86,6 +109,7 @@ def pagerank(
     converges in far fewer supersteps than a cold start (pinned by
     test_streaming's incremental test).
     """
+    check_strategy(strategy, "pagerank")
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -112,30 +136,14 @@ def pagerank(
     )
     n = base.count()
     if n == 0:
+        e.unpersist()
+        base.unpersist()
         return spark.createDataFrame([], "id long, rank double")
     has_dangling = base.where(F.col("out_deg") == 0).limit(1).count() > 0
     if strategy == "auto":
-        # large graphs: the CSR single-exchange plan measured strictly
-        # better than copartition (2.8x faster supersteps at 16 cores,
-        # 0.9+ vs 0.34 scaling efficiency); its one-time build amortizes
-        # over the iteration count.  copartition remains selectable.
         strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "csr"
 
-    ew = None
-    if strategy == "copartition":
-        # stationary weighted edge table: (src, dst, out_deg), partitioned
-        # on src once; only the rank table moves per superstep.
-        ew = e.join(outdeg.withColumnRenamed("id", "src"), on="src").select(
-            "src", "dst", "out_deg"
-        )
-        if not pre_partitioned:
-            # a pre-bucketed edge table already satisfies hash(src): the
-            # join above reuses the bucket layout, so no repartition
-            ew = ew.repartition(npart, "src")
-        ew = ew.cache()
-        ew.count()
-    csr = zeros = dang_ids = csr2 = None
-    nb_dst = 0
+    csr = zeros = dang_ids = None
     if strategy == "csr":
         from motive_spark.graph.csr import build_csr
 
@@ -145,28 +153,16 @@ def pagerank(
             F.col("id").alias("vid"), F.lit(0.0).alias("w")
         ).cache()
         zeros.count()
-    elif strategy == "csr2d":
-        # dst-block-aligned adjacency: the contribution shuffle is
-        # bounded by ~|V| rows (map-side partial agg compacts within
-        # each block's vertex range) at the price of replicating the
-        # |V|-row value table nb_dst = sqrt(P) times — the winning
-        # trade when average degree exceeds 2*sqrt(P) (csr.py).
-        from motive_spark.graph.csr import build_csr_2d
-
-        nb_dst = max(1, int(round(npart**0.5)))
-        csr2 = build_csr_2d(e, nb_dst, n_blocks=npart).cache()
-        csr2.count()
-    if strategy in ("csr", "csr2d") and has_dangling:
-        dang_ids = (
-            base.where(F.col("out_deg") == 0)
-            .select("id")
-            .repartition(npart, "id")
-            .cache()
-        )
-        dang_ids.count()
+        if has_dangling:
+            dang_ids = (
+                base.where(F.col("out_deg") == 0)
+                .select("id")
+                .repartition(npart, "id")
+                .cache()
+            )
+            dang_ids.count()
 
     ckpt = CheckpointManager(spark, checkpoint_dir)
-    start_iter = 0
     ranks = base.select("id", (F.lit(1.0) / F.lit(float(n))).alias("rank"))
     if init_ranks is not None:
         warm = base.select("id").join(
@@ -179,28 +175,17 @@ def pagerank(
         total = warm.agg(F.sum("rank")).collect()[0][0] or 1.0
         ranks = warm.select(
             "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-        ).localCheckpoint(eager=True)
-    if resume and checkpoint_dir is not None:
-        last = ckpt.latest()
-        if last is not None:
-            ranks = ckpt.load(last)
-            start_iter = last + 1
+        )
 
-    if strategy == "broadcast":
-        # the iterated state carries the stationary out_deg column so no
-        # superstep re-joins the base table (guide §2.4: the old loop
-        # evaluated ranks⋈base twice per iteration — once for the live
-        # sender, once for the dangling sum); the update expression is
-        # unchanged, so ranks are bit-identical.  A resumed checkpoint
-        # written by the (id, rank)-only layout re-attaches out_deg once.
-        if "out_deg" not in ranks.columns:
-            ranks = ranks.join(base, on="id").select("id", "out_deg", "rank")
-
-    import time as _time
-
-    for i in range(start_iter, max_iter):
-        _t0 = _time.time()
+    def step(ranks: DataFrame) -> DataFrame:
+        carry: list[str] = []
         if strategy == "broadcast":
+            # the iterated state carries the stationary out_deg column so
+            # no superstep re-joins the base table (guide §2.4); the
+            # initial state, and a resumed checkpoint written by the
+            # (id, rank)-only layout, attach it once
+            if "out_deg" not in ranks.columns:
+                ranks = ranks.join(base, on="id").select("id", "out_deg", "rank")
             sender = F.broadcast(ranks.where(F.col("out_deg") > 0))
             contribs = (
                 sender.join(e, on=[ranks.id == e.src])
@@ -210,60 +195,6 @@ def pagerank(
             dang = ranks.where(F.col("out_deg") == 0).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
             )
-        elif strategy == "copartition":
-            contribs = (
-                ew.join(ranks.hint("shuffle_hash"), on=[ranks.id == ew.src])
-                .groupBy(F.col("dst").alias("vid"))
-                .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("recv"))
-            )
-            dang = (
-                ranks.join(base, on="id")
-                .where(F.col("out_deg") == 0)
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang"))
-            )
-        elif strategy == "csr2d":
-            from motive_spark.graph.csr import gather_sum_2d
-
-            values = (
-                ranks.join(base, on="id")
-                .where(F.col("out_deg") > 0)
-                .select("id", (F.col("rank") / F.col("out_deg")).alias("value"))
-            )
-            contribs = gather_sum_2d(csr2, values, nb_dst).select(
-                F.col("id").alias("vid"), F.col("gathered").alias("recv")
-            )
-            dang = (
-                ranks.join(dang_ids.hint("shuffle_hash"), on="id").agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
-                )
-                if has_dangling
-                else None
-            )
-        else:  # csr — single-exchange superstep
-            contrib = csr.join(
-                ranks.hint("shuffle_hash"), on=[ranks.id == csr.src]
-            ).select(
-                (F.col("rank") / F.col("out_deg")).alias("w"),
-                F.explode("dst_list").alias("vid"),
-            )
-            contribs = (
-                contrib.unionByName(zeros.select("w", "vid"))
-                .groupBy("vid")
-                .agg(F.sum("w").alias("recv"))
-            )
-            dang = (
-                ranks.join(dang_ids.hint("shuffle_hash"), on="id").agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
-                )
-                if has_dangling
-                else None
-            )
-
-        carry: list[str] = []
-        if strategy == "csr":
-            # zeros already make the aggregation total over all vertices
-            new_ranks = contribs.select(F.col("vid").alias("id"), "recv")
-        elif strategy == "broadcast":
             # vertex universe comes from the state itself (same rows as
             # base) and out_deg rides along into the next superstep
             carry = ["out_deg"]
@@ -272,55 +203,46 @@ def pagerank(
                 on=[ranks.id == contribs.vid],
                 how="left",
             ).select("id", "out_deg", "recv")
-        else:
-            new_ranks = base.join(
-                contribs.hint("shuffle_hash"), on=[base.id == contribs.vid], how="left"
-            ).select("id", "recv")
+        else:  # csr — single-exchange superstep
+            contrib = csr.join(
+                ranks.hint("shuffle_hash"), on=[ranks.id == csr.src]
+            ).select(
+                (F.col("rank") / F.col("out_deg")).alias("w"),
+                F.explode("dst_list").alias("vid"),
+            )
+            # zeros make the aggregation total over all vertices
+            new_ranks = (
+                contrib.unionByName(zeros.select("w", "vid"))
+                .groupBy("vid")
+                .agg(F.sum("w").alias("recv"))
+                .select(F.col("vid").alias("id"), "recv")
+            )
+            if has_dangling:
+                dang = ranks.join(dang_ids.hint("shuffle_hash"), on="id").agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
+                )
+        rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.coalesce(
+            F.col("recv"), F.lit(0.0)
+        )
         if has_dangling:
-            new_ranks = new_ranks.crossJoin(F.broadcast(dang)).select(
-                "id",
-                *carry,
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("recv"), F.lit(0.0))
-                    + F.lit(damping) * F.col("dang") / F.lit(float(n))
-                ).alias("rank"),
-            )
-        else:
-            new_ranks = new_ranks.select(
-                "id",
-                *carry,
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("recv"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        if plans_out is not None and i == start_iter:
+            new_ranks = new_ranks.crossJoin(F.broadcast(dang))
+            rank = rank + F.lit(damping) * F.col("dang") / F.lit(float(n))
+        new_ranks = new_ranks.select("id", *carry, rank.alias("rank"))
+        if plans_out is not None and not ckpt.counters:
             plans_out.append(
                 new_ranks._jdf.queryExecution().executedPlan().toString()
             )
-        new_ranks = ckpt.save(new_ranks, i)
-        ckpt.annotate(superstep_sec=round(_time.time() - _t0, 3))
-        if tol is not None:
-            delta = (
-                new_ranks.select("id", "rank")
-                .join(ranks.select("id", F.col("rank").alias("old")), on="id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .collect()[0][0]
-            )
-            ckpt.annotate(l1_delta=delta)
-            ranks = new_ranks
-            if delta < tol:
-                break
-        else:
-            ranks = new_ranks
+        return new_ranks
+
+    ranks = ckpt.run(
+        ranks, step, max_iter, resume=resume,
+        probe=l1_delta if tol is not None else None, tol=tol,
+    )
     # final state is materialized; release inputs — any recompute falls
     # back to the source scan, still correct.
-    e.unpersist()
-    base.unpersist()
-    for extra in (ew, csr, zeros, dang_ids, csr2):
-        if extra is not None:
-            extra.unpersist()
+    for cached in (e, base, csr, zeros, dang_ids):
+        if cached is not None:
+            cached.unpersist()
     if counters_out is not None:
         counters_out.extend(ckpt.counters)
     return ranks.select("id", "rank")
@@ -370,6 +292,8 @@ def weighted_pagerank(
     )
     n = base.count()
     if n == 0:
+        ew.unpersist()
+        base.unpersist()
         return spark.createDataFrame([], "id long, rank double")
     if strategy == "auto":
         # a 10^9-row rank table must never broadcast: co-partition the
@@ -379,12 +303,8 @@ def weighted_pagerank(
     # the iterated state carries the stationary w_out column so no
     # superstep re-joins base (guide §2.4); the sender stays a narrow
     # (id, rank) projection because the edge table carries its own
-    # w_out copy for the contribution expression.  Update arithmetic is
-    # unchanged, so ranks are bit-identical.
-    state = base.select(
-        "id", "w_out", (F.lit(1.0) / n).alias("rank")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    # w_out copy for the contribution expression.
+    def step(state: DataFrame) -> DataFrame:
         ranks = state.select("id", "rank")
         sender = (
             F.broadcast(ranks)
@@ -399,7 +319,7 @@ def weighted_pagerank(
         dang = state.where(F.col("w_out") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
         )
-        new_state = (
+        return (
             state.select("id", "w_out")
             .join(
                 contribs.hint("shuffle_hash"),
@@ -416,22 +336,12 @@ def weighted_pagerank(
                     + F.lit(damping) * F.col("dang") / F.lit(float(n))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-        if tol is not None:
-            delta = (
-                new_state.select("id", "rank")
-                .join(
-                    state.select("id", F.col("rank").alias("old")), on="id"
-                )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .collect()[0][0]
-            )
-            state = new_state
-            if delta < tol:
-                break
-        else:
-            state = new_state
+
+    state = CheckpointManager(spark, None).run(
+        base.select("id", "w_out", (F.lit(1.0) / n).alias("rank")),
+        step, max_iter, probe=l1_delta if tol is not None else None, tol=tol,
+    )
     ew.unpersist()
     base.unpersist()
     return state.select("id", "rank")
@@ -503,8 +413,6 @@ def personalized_pagerank(
         .cache()
     )
     n = base.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, rank double")
     if strategy == "auto":
         # same discipline as pagerank: the rank side broadcasts only
         # below the threshold, else it co-partitions (shuffle-hash) —
@@ -512,14 +420,8 @@ def personalized_pagerank(
         strategy = "broadcast" if n <= BROADCAST_MAX_VERTICES else "copartition"
 
     # the iterated state carries the stationary (out_deg, s) columns so
-    # no superstep re-joins the base table (guide §2.4: the old loop
-    # evaluated ranks⋈base twice per iteration — once for the live
-    # sender, once for the dangling sum); the update expression is
-    # unchanged, so ranks are bit-identical
-    state = base.select(
-        "id", "out_deg", "s", F.col("s").alias("rank")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    # no superstep re-joins the base table (guide §2.4)
+    def step(state: DataFrame) -> DataFrame:
         live = state.where(F.col("out_deg") > 0)
         sender = (
             F.broadcast(live)
@@ -534,7 +436,7 @@ def personalized_pagerank(
         dang = state.where(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
         )
-        new_state = (
+        return (
             state.select("id", "out_deg", "s")
             .join(
                 contribs.hint("shuffle_hash"),
@@ -552,22 +454,12 @@ def personalized_pagerank(
                     + F.lit(damping) * F.col("dang") * F.col("s")
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
-        if tol is not None:
-            delta = (
-                new_state.select("id", "rank")
-                .join(
-                    state.select("id", F.col("rank").alias("old")), on="id"
-                )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))).alias("d"))
-                .collect()[0][0]
-            )
-            state = new_state
-            if delta < tol:
-                break
-        else:
-            state = new_state
+
+    state = CheckpointManager(spark, None).run(
+        base.select("id", "out_deg", "s", F.col("s").alias("rank")),
+        step, max_iter, probe=l1_delta if tol is not None else None, tol=tol,
+    )
     e.unpersist()
     base.unpersist()
     present.unpersist()
@@ -631,18 +523,8 @@ def grouped_pagerank(
     d = float(damping)
     # the iterated state carries the stationary per-vertex out_deg and
     # per-group n columns, so no superstep re-joins base or ngt (guide
-    # §2.4: the old loop joined ranks⋈base for the dangling sum and
-    # base⋈ngt for the update every iteration).  The update expression
-    # is unchanged, so ranks are bit-identical.
-    state = (
-        base.join(ngt, "g")
-        .select(
-            "g", "id", "out_deg", "n", (F.lit(1.0) / F.col("n")).alias("rank")
-        )
-        .repartition(npart, "g", "id")
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
+    # §2.4)
+    def step(state: DataFrame) -> DataFrame:
         rside = state.select(
             F.col("g").alias("_rg"),
             F.col("id").alias("_rid"),
@@ -661,7 +543,7 @@ def grouped_pagerank(
             .groupBy("g")
             .agg(F.sum("rank").alias("dang"))
         )
-        state = (
+        return (
             state.select("g", "id", "out_deg", "n")
             .join(contribs, ["g", "id"], "left")
             .join(dang, "g", "left")
@@ -679,8 +561,18 @@ def grouped_pagerank(
                 ).alias("rank"),
             )
             .repartition(npart, "g", "id")
-            .localCheckpoint()
         )
+
+    ckpt = CheckpointManager(spark, None)
+    # the first superstep reads the initial state three times
+    state = ckpt.cache(
+        base.join(ngt, "g")
+        .select(
+            "g", "id", "out_deg", "n", (F.lit(1.0) / F.col("n")).alias("rank")
+        )
+        .repartition(npart, "g", "id")
+    )
+    state = ckpt.run(state, step, max_iter)
     e.unpersist()
     base.unpersist()
     ngt.unpersist()

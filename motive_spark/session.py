@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, capped at 8g and at least 1g."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(8, ram // (4 * 1024**3)))}g"
+
+
 def get_spark(
     app_name: str = "motive_spark",
     master: str | None = None,
@@ -23,7 +29,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster this would be ~2-3x total executor cores.
+    cluster this would be ~2-3x total executor cores.  The driver heap
+    is ``$SPARK_DRIVER_MEM``, else a quarter of physical RAM (1g..8g).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -45,7 +52,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -12,7 +12,8 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
 def spark():
     from motive_spark.session import get_spark
 
-    s = get_spark("motive_spark_tests", master="local[8]", shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions
+    s = get_spark("motive_spark_tests")
     yield s
 
 

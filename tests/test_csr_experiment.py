@@ -126,41 +126,6 @@ def test_checkpoint_resume_exact(spark, tmp_path):
     assert all("superstep_sec" in c for c in counters)
 
 
-def test_gather_sum_2d_matches_1d(spark):
-    from motive_spark.graph.csr import (
-        build_csr,
-        build_csr_2d,
-        gather_sum,
-        gather_sum_2d,
-    )
-
-    pairs = random_pairs(60, 500, seed=21)
-    edges = edges_df(spark, pairs)
-    vals = spark.createDataFrame(
-        [(v, float((v * 7) % 11 + 1)) for v in range(60)], "id long, value double"
-    )
-    one_d = {
-        r.id: r.gathered for r in gather_sum(build_csr(edges), vals).collect()
-    }
-    two_d = {
-        r.id: r.gathered
-        for r in gather_sum_2d(build_csr_2d(edges, nb_dst=4), vals, nb_dst=4).collect()
-    }
-    assert set(one_d) == set(two_d)
-    for k in one_d:
-        assert abs(one_d[k] - two_d[k]) < 1e-9
-    # block alignment: each csr row's dst_list stays inside its block
-    from pyspark.sql import functions as F
-
-    csr2d = build_csr_2d(edges, nb_dst=4)
-    bad = (
-        csr2d.select("dst_block", F.explode("dst_list").alias("dst"))
-        .where(F.pmod(F.xxhash64("dst"), F.lit(4)).cast("int") != F.col("dst_block"))
-        .count()
-    )
-    assert bad == 0
-
-
 def test_csr_superstep_join_is_exchange_free(spark):
     """The core perf property of the csr strategy, pinned at the plan
     level: a superstep's rank ⋈ csr shuffle-hash join has NO exchange on
@@ -247,13 +212,12 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 
 def test_pagerank_pre_partitioned_bucketed_no_src_exchange(spark, tmp_path):
-    """A pagerank superstep over a bucketed edge table with
+    """A csr pagerank superstep over a bucketed edge table with
     pre_partitioned=True must never shuffle on src ANYWHERE (including
-    inside the cached ew relation): the bucket layout replaces the
-    kernel's repartition pass, only ranks (hash(id)) and the
-    contribution aggregation (hash(dst)) exchange.  The default path
-    over the same raw edges DOES shuffle on src — the comparative
-    proof, plus rank equality."""
+    inside the cached csr relation): the bucket layout replaces the
+    kernel's repartition pass.  The default path over the same raw
+    edges DOES shuffle on src — the comparative proof, plus rank
+    equality."""
     from pyspark.sql import functions as F
 
     from motive_spark.kernels import pagerank
@@ -273,7 +237,7 @@ def test_pagerank_pre_partitioned_bucketed_no_src_exchange(spark, tmp_path):
                 read_table(spark, "bt_pr_edges"),
                 max_iter=3,
                 tol=None,
-                strategy="copartition",
+                strategy="csr",
                 pre_partitioned=True,
                 plans_out=plans_b,
             ).collect()
@@ -284,7 +248,7 @@ def test_pagerank_pre_partitioned_bucketed_no_src_exchange(spark, tmp_path):
                 edges,
                 max_iter=3,
                 tol=None,
-                strategy="copartition",
+                strategy="csr",
                 plans_out=plans_p,
             ).collect()
         }
@@ -335,57 +299,6 @@ def test_cc_lp_pre_partitioned_bucketed_equivalence(spark):
         assert lp_b == lp_p
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_sym_edges")
-
-
-def test_pagerank_csr2d_matches_broadcast(spark):
-    """strategy='csr2d' (block-aligned 2D gather) reproduces broadcast
-    ranks to 1e-12, dangling vertices included."""
-    from pyspark.sql import functions as F
-
-    from motive_spark.kernels import pagerank
-
-    pairs = random_pairs(80, 900, seed=21) + [(99, 0)]  # 99 is dangling-ish
-    e = edges_df(spark, pairs)
-    a = {r.id: r.rank for r in pagerank(e, max_iter=8, tol=None,
-                                        strategy="broadcast").collect()}
-    b = {r.id: r.rank for r in pagerank(e, max_iter=8, tol=None,
-                                        strategy="csr2d").collect()}
-    assert set(a) == set(b)
-    assert all(abs(a[k] - b[k]) < 1e-12 for k in a)
-
-
-def test_gather_sum_2d_csr_side_stationary(spark):
-    """The 2D gather's physical plan: the dst_block-partitioned CSR side
-    feeds the join with NO live exchange (only the replicated value
-    table moves), and the contribution aggregation partial-aggregates
-    before its exchange (map-side compaction — the ~|V| shuffle bound)."""
-    from pyspark.sql import functions as F
-
-    from motive_spark.graph.csr import build_csr_2d, gather_sum_2d
-
-    e = edges_df(spark, random_pairs(60, 500, seed=3))
-    nb = 4
-    csr2 = build_csr_2d(e, nb).cache()
-    csr2.count()
-    vals = (
-        e.select(F.col("src").alias("id")).distinct()
-        .select("id", F.lit(1.0).alias("value"))
-        .localCheckpoint(eager=True)
-    )
-    out = gather_sum_2d(csr2, vals, nb)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    live = plan.split("InMemoryRelation")[0]
-    # exchanges on the live path: one for the replicated value table, one
-    # for the final aggregation; the cached CSR side contributes none
-    assert live.count("Exchange ") <= 2, plan
-    assert "ShuffledHashJoin" in plan
-    assert "partial_sum" in plan or "HashAggregate" in live, plan
-    # correctness: gathered == in-degree (value 1 per in-neighbor)
-    want = {r.dst: r.c for r in
-            e.groupBy("dst").agg(F.count(F.lit(1)).alias("c")).collect()}
-    got = {r.id: r.gathered for r in out.collect()}
-    assert got == {k: float(v) for k, v in want.items()}
-    csr2.unpersist()
 
 
 def test_checkpoint_resume_from_old_rank_only_layout(spark, tmp_path):

@@ -131,10 +131,9 @@ def test_triangles_random(spark, seed):
 
 
 def test_cc_lp_strategies_match(spark):
-    # every physical path — broadcast (small |V|), copartition (the
-    # >BROADCAST_MAX_VERTICES plan, no |V|-row broadcast per superstep),
-    # and csr (single-exchange superstep over salted CSR blocks) —
-    # produces identical labels
+    # both physical paths — broadcast (small |V|) and csr (the
+    # >BROADCAST_MAX_VERTICES plan: single-exchange superstep over
+    # salted CSR blocks) — produce identical labels
     from motive_spark.kernels import connected_components, label_propagation
 
     pairs = random_pairs(60, 150, seed=5, directed=False)
@@ -144,17 +143,17 @@ def test_cc_lp_strategies_match(spark):
             r["id"]: r["component"]
             for r in connected_components(e, strategy=s).collect()
         }
-        for s in ("broadcast", "copartition", "csr")
+        for s in ("broadcast", "csr")
     }
-    assert cc["broadcast"] == cc["copartition"] == cc["csr"] == py_components(pairs)
+    assert cc["broadcast"] == cc["csr"] == py_components(pairs)
     lp = {
         s: {
             r["id"]: r["label"]
             for r in label_propagation(e, iters=3, strategy=s).collect()
         }
-        for s in ("broadcast", "copartition", "csr")
+        for s in ("broadcast", "csr")
     }
-    assert lp["broadcast"] == lp["copartition"] == lp["csr"]
+    assert lp["broadcast"] == lp["csr"]
 
 
 def test_label_propagation_deterministic(spark):
@@ -171,10 +170,39 @@ def test_label_propagation_deterministic(spark):
 
 
 def test_auto_strategy_selects_csr_above_threshold(spark, monkeypatch):
-    """auto resolves to the csr plan above BROADCAST_MAX_VERTICES and
-    still produces identical results (threshold lowered to force it)."""
+    """The size switch, pinned on both sides: at the real
+    BROADCAST_MAX_VERTICES, auto takes the broadcast plan (no CSR
+    build); with the threshold lowered below |V| it takes the csr plan
+    (one CSR build per kernel) and produces identical results."""
     import importlib
 
+    from motive_spark.graph import csr as csr_mod
+
+    builds = []
+    real_build = csr_mod.build_csr
+
+    def spy(*args, **kwargs):
+        builds.append(1)
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(csr_mod, "build_csr", spy)
+    pairs = random_pairs(40, 100, seed=9, directed=False)
+    e = edges_df(spark, pairs)
+    from motive_spark.kernels import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+
+    def run_all():
+        return (
+            {r["id"]: r["component"] for r in connected_components(e).collect()},
+            {r["id"]: r["label"] for r in label_propagation(e, iters=2).collect()},
+            {r["id"]: r["rank"] for r in pagerank(e, max_iter=10, tol=None).collect()},
+        )
+
+    cc_b, lp_b, pr_b = run_all()
+    assert builds == []
     # the kernels package re-exports same-named FUNCTIONS; resolve the
     # modules explicitly
     for name in (
@@ -185,28 +213,147 @@ def test_auto_strategy_selects_csr_above_threshold(spark, monkeypatch):
         monkeypatch.setattr(
             importlib.import_module(name), "BROADCAST_MAX_VERTICES", 5
         )
-    pairs = random_pairs(40, 100, seed=9, directed=False)
-    e = edges_df(spark, pairs)
+    cc_c, lp_c, pr_c = run_all()
+    assert builds == [1, 1, 1]
+    assert cc_c == cc_b == py_components(pairs)
+    assert lp_c == lp_b
+    assert pr_c.keys() == pr_b.keys()
+    assert all(abs(pr_c[k] - pr_b[k]) < 1e-12 for k in pr_b)
+
+
+@pytest.mark.parametrize(
+    "strategy", ["copartition", "csr2d", "shuffle_hash", "BROADCAST"]
+)
+def test_unknown_strategy_raises(spark, strategy):
+    """pagerank, components and label propagation have exactly the two
+    plans auto chooses between; any other strategy is an error, raised
+    before any Spark work."""
     from motive_spark.kernels import (
         connected_components,
         label_propagation,
         pagerank,
     )
 
-    cc = {r["id"]: r["component"] for r in connected_components(e).collect()}
-    assert cc == py_components(pairs)
-    lp_a = {r["id"]: r["label"] for r in label_propagation(e, iters=2).collect()}
-    lp_b = {
-        r["id"]: r["label"]
-        for r in label_propagation(e, iters=2, strategy="broadcast").collect()
+    e = edges_df(spark, TWO_COMPONENTS)
+    for fn in (pagerank, connected_components, label_propagation):
+        with pytest.raises(ValueError, match="strategy"):
+            fn(e, strategy=strategy)
+
+
+# Spark jobs per public call (plus one trailing count) on
+# random_pairs(200, 800, seed=7), measured before these kernels moved
+# onto the shared superstep loop; the loop must not add jobs.
+JOB_CEILINGS = {
+    "pagerank_broadcast_3_fixed": 33,
+    "pagerank_tol": 47,
+    "pagerank_csr_checkpoint": 45,
+    "components_csr": 50,
+    "components_auto": 49,
+    "label_propagation_2": 21,
+}
+
+
+def test_kernel_job_counts_do_not_grow(spark, tmp_path):
+    from motive_spark.kernels import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+
+    sc = spark.sparkContext
+    e = edges_df(spark, random_pairs(200, 800, seed=7))
+    calls = {
+        "pagerank_broadcast_3_fixed": lambda: pagerank(
+            e, max_iter=3, tol=None, strategy="broadcast"
+        ),
+        "pagerank_tol": lambda: pagerank(e, max_iter=3, tol=1e-2),
+        "pagerank_csr_checkpoint": lambda: pagerank(
+            e, max_iter=3, tol=None, strategy="csr",
+            checkpoint_dir=str(tmp_path / "pr"),
+        ),
+        "components_csr": lambda: connected_components(e, strategy="csr"),
+        "components_auto": lambda: connected_components(e),
+        "label_propagation_2": lambda: label_propagation(e, iters=2),
     }
-    assert lp_a == lp_b
-    pr_a = {r["id"]: r["rank"] for r in pagerank(e, max_iter=10, tol=None).collect()}
-    pr_b = {
-        r["id"]: r["rank"]
-        for r in pagerank(e, max_iter=10, tol=None, strategy="broadcast").collect()
+    got = {}
+    try:
+        for name, call in calls.items():
+            group = f"job_ceiling_{name}"
+            sc.setJobGroup(group, name)
+            call().count()
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    over = {k: (v, JOB_CEILINGS[k]) for k, v in got.items() if v > JOB_CEILINGS[k]}
+    assert not over, over
+
+
+def test_iterative_kernels_leave_at_most_their_state_cached(spark, tmp_path):
+    """After each ported kernel returns, the session holds at most one
+    more persisted RDD than before — the returned localCheckpoint state —
+    and none when the state lives in a checkpoint dir."""
+    from motive_spark.kernels import (
+        connected_components,
+        grouped_pagerank,
+        label_propagation,
+        pagerank,
+        personalized_pagerank,
+        seeded_label_propagation,
+        weighted_pagerank,
+    )
+
+    jsc = spark.sparkContext._jsc
+    e = edges_df(spark, random_pairs(60, 200, seed=4))
+    seeds = spark.createDataFrame([(0, 1), (1, 2)], "id long, label long")
+    calls = {
+        "pagerank_broadcast": lambda d: pagerank(
+            e, max_iter=3, tol=1e-9, strategy="broadcast", checkpoint_dir=d
+        ),
+        "pagerank_csr": lambda d: pagerank(
+            e, max_iter=3, tol=None, strategy="csr", checkpoint_dir=d
+        ),
+        "components_broadcast": lambda d: connected_components(
+            e, strategy="broadcast", checkpoint_dir=d
+        ),
+        "components_csr": lambda d: connected_components(
+            e, strategy="csr", checkpoint_dir=d
+        ),
+        "label_propagation_broadcast": lambda d: label_propagation(
+            e, iters=3, strategy="broadcast", checkpoint_dir=d
+        ),
+        "label_propagation_csr": lambda d: label_propagation(
+            e, iters=3, strategy="csr", checkpoint_dir=d
+        ),
     }
-    assert all(abs(pr_a[k] - pr_b[k]) < 1e-12 for k in pr_b)
+    no_dir_only = {
+        "weighted_pagerank": lambda: weighted_pagerank(
+            e.withColumn("mult", F.col("src") % 3 + 1), max_iter=3, tol=1e-9
+        ),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            e, [0, 1], max_iter=3, tol=1e-9
+        ),
+        "grouped_pagerank": lambda: grouped_pagerank(
+            e.withColumn("g", F.col("src") % 2), max_iter=3
+        ),
+        "seeded_label_propagation": lambda: seeded_label_propagation(
+            e, seeds, iters=3
+        ),
+    }
+    growth = {}
+    for name, call in calls.items():
+        for d, allowed in ((None, 1), (str(tmp_path / name), 0)):
+            before = len(jsc.getPersistentRDDs())
+            call(d)
+            growth[(name, d is not None)] = (
+                len(jsc.getPersistentRDDs()) - before, allowed
+            )
+    for name, call in no_dir_only.items():
+        before = len(jsc.getPersistentRDDs())
+        call()
+        growth[(name, False)] = (len(jsc.getPersistentRDDs()) - before, 1)
+    leaks = {k: v for k, v in growth.items() if v[0] > v[1]}
+    assert not leaks, leaks
 
 
 def test_personalized_pagerank_matches_numpy(spark):

@@ -40,7 +40,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from motive_spark.session import get_spark
 
-    spark = get_spark("contract_check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("contract_check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
