@@ -10,8 +10,8 @@ multimodal plumbing) that a 10^12-file code-table deployment needs.
 Design stance (SURVEY.md §7.0):
   * everything relational is declarative DataFrame ops — Catalyst owns
     pushdown / pruning / join selection;
-  * Python appears only as vectorized pandas/Arrow UDFs at the six
-    documented points (SURVEY.md §2.10);
+  * Python appears only as vectorized pandas/Arrow UDFs at the points
+    COVERAGE.md §2.10 lists (import extraction runs in the JVM);
   * iteration checkpoints every superstep to Parquet with per-partition
     counters so runs resume mid-iteration.
 """

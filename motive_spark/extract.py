@@ -1,58 +1,62 @@
-"""Repo-dependency edge extraction from a source-code table.
+r"""Repo-dependency edge extraction from a source-code table.
 
 Input shape (BASELINE.json input_hint): ``(repo:string, path:string,
 commit:string, lang:string, content:string)`` — at production scale an
 Iceberg table of 10^12 files; here any DataFrame with those columns.
 
-Pipeline (all vectorized — no per-row Python):
+Pipeline (all JVM-side — no Python worker is started):
   1. ``with_sha`` — attach ``sha2(content, 256)`` so the per-row content
      invariant is carried through every derived table (input_hint).
-  2. ``extract_imports`` — Arrow-batched pandas UDF running one compiled
-     regex per language over the content column, yielding
-     ``array<string>`` of referenced module roots (SURVEY §2.10-1).
+  2. ``extract_imports`` — one ``regexp_extract_all`` per language,
+     chosen by a ``CASE`` on ``lang``, yielding the distinct referenced
+     module roots of each file (SURVEY §2.10-1).
   3. ``repo_edges`` — explode, resolve module root → repo name (identity
      mapping for the synthetic convention ``repo_<k>``; a join against a
      module-ownership table in production), aggregate to distinct
      ``(src_repo, dst_repo)`` with a file-count multiplicity.
 
-The scan reads only (repo, lang, content) — column pruning reaches the
-parquet/Iceberg scan because the UDF is applied after a narrow select.
+The scan reads only (repo, path, lang, content) — column pruning reaches
+the parquet/Iceberg scan because extraction is a projection of them.
+
+The patterns are written for Java regex but match what Python's ``re``
+matches on ``str`` patterns with ``re.M`` (tests/test_extract.py keeps
+the Python originals as the reference):
+  * ``\w`` is spelled ``[\p{L}\p{N}_]`` (Python: ``str.isalnum()`` or
+    ``_``); Java's own ``\w``, with or without ``(?U)``, differs;
+  * ``\s`` is ``[\s\x1c-\x1f]`` under ``(?U)`` (Python: ``str.isspace``,
+    which also counts the four information separators);
+  * either class may sit inside a ``[...]`` — Java reads the nested
+    class as a union;
+  * ``(?m)`` plus ``(?d)``: ``^`` matches only after ``\n``, not after
+    ``\r``, U+0085 or U+2028/9.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+
+def _java(pattern: str) -> str:
+    """Java spelling of a Python ``re.M`` pattern (see the module notes)."""
+    return "(?mdU)" + pattern.replace(r"\w", r"[\p{L}\p{N}_]").replace(
+        r"\s", r"[\s\x1c-\x1f]"
+    )
+
 
 # language → regex capturing the referenced module root.  Pattern set is
 # deliberately conservative: first path segment of import/include/use.
 _LANG_PATTERNS = {
-    "python": re.compile(r"^\s*(?:import|from)\s+([A-Za-z_][\w]*)", re.M),
-    "java": re.compile(r"^\s*import\s+(?:static\s+)?([A-Za-z_][\w]*)", re.M),
-    "go": re.compile(r'^\s*(?:import\s+)?"([\w.\-]+)(?:/[\w./\-]*)?"', re.M),
-    "rust": re.compile(r"^\s*use\s+([A-Za-z_][\w]*)", re.M),
-    "cpp": re.compile(r'^\s*#\s*include\s+[<"]([\w\-]+)(?:/[\w./\-]*)?[>"]', re.M),
+    lang: _java(p)
+    for lang, p in {
+        "python": r"^\s*(?:import|from)\s+([A-Za-z_][\w]*)",
+        "java": r"^\s*import\s+(?:static\s+)?([A-Za-z_][\w]*)",
+        "go": r'^\s*(?:import\s+)?"([\w.\-]+)(?:/[\w./\-]*)?"',
+        "rust": r"^\s*use\s+([A-Za-z_][\w]*)",
+        "cpp": r'^\s*#\s*include\s+[<"]([\w\-]+)(?:/[\w./\-]*)?[>"]',
+    }.items()
 }
-_DEFAULT = re.compile(r"^\s*(?:import|include|use|require)\s+[\"'<]?([\w.\-]+)", re.M)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _imports_udf(lang: pd.Series, content: pd.Series) -> pd.Series:
-    """Vectorized per-batch regex extraction (Arrow transfer, no row loop
-    crossing the JVM boundary; the per-element findall runs inside one
-    Python batch of ~10k rows)."""
-    out = []
-    for lg, text in zip(lang.to_numpy(), content.to_numpy()):
-        if text is None:
-            out.append([])
-            continue
-        pat = _LANG_PATTERNS.get(lg, _DEFAULT)
-        out.append(sorted(set(pat.findall(text))))
-    return pd.Series(out)
+_DEFAULT = _java(r"^\s*(?:import|include|use|require)\s+[\"'<]?([\w.\-]+)")
 
 
 def with_sha(code: DataFrame) -> DataFrame:
@@ -62,11 +66,13 @@ def with_sha(code: DataFrame) -> DataFrame:
 
 def extract_imports(code: DataFrame) -> DataFrame:
     """(repo, path, module) — one row per referenced module root per file."""
-    narrow = code.select("repo", "path", "lang", "content")
-    return (
-        narrow.withColumn("module", F.explode(_imports_udf("lang", "content")))
-        .select("repo", "path", "module")
-    )
+    def found(pattern: str):
+        return F.array_distinct(F.regexp_extract_all("content", F.lit(pattern), 1))
+
+    modules = found(_DEFAULT)  # unknown or null lang
+    for lang, pat in _LANG_PATTERNS.items():
+        modules = F.when(F.col("lang") == lang, found(pat)).otherwise(modules)
+    return code.select("repo", "path", F.explode(modules).alias("module"))
 
 
 def repo_edges(
@@ -101,14 +107,19 @@ def repo_edges(
 def dense_edge_table(code: DataFrame):
     """End-to-end: code table → dense-long edge DataFrame + vertex map.
 
-    Returns (edges(src, dst, n_files), vertex_map(orig_key, id)).
+    Returns (edges(src, dst), vertex_map(orig_key, id)), both
+    materialized.  The code table is scanned and its imports extracted
+    once: the named edges are checkpointed before ``normalize_ids``
+    reads them three times (range sample, ranking, id join), and freed
+    once the dense edges are.
     """
-    from motive_spark.graph.normalize import normalize_ids
+    from motive_spark.checkpoint import CheckpointManager
+    from motive_spark.graph import normalize
 
-    named = repo_edges(code)
-    dense, vmap = normalize_ids(
-        named.select(
-            F.col("src_repo").alias("src"), F.col("dst_repo").alias("dst")
-        )
-    )
+    named = repo_edges(code).select(
+        F.col("src_repo").alias("src"), F.col("dst_repo").alias("dst")
+    ).localCheckpoint(eager=True)
+    dense, vmap = normalize.normalize_ids(named)
+    dense = dense.localCheckpoint(eager=True)
+    CheckpointManager._release(named)
     return dense, vmap

@@ -64,9 +64,10 @@ def dense_index(keys: DataFrame, key_col: str) -> DataFrame:
     produces, WITHOUT the single-partition global sort: range-partition
     the keys, rank within each partition, then add the cumulative count
     of the preceding partitions (collected offsets — one row per
-    PARTITION, never per key).  The ranked table is localCheckpointed
-    before the count job so both jobs observe the SAME sampled range
-    boundaries.
+    PARTITION, never per key — applied as a literal array indexed by
+    partition, so no DataFrame is built from Python objects).  The
+    ranked table is localCheckpointed before the count job so both jobs
+    observe the SAME sampled range boundaries.
     """
     spark = keys.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -81,19 +82,15 @@ def dense_index(keys: DataFrame, key_col: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    counts = {
-        int(r["part"]): int(r["cnt"])
-        for r in local.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets, acc = [], 0
-    for p in sorted(counts):
-        offsets.append((p, acc))
-        acc += counts[p]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "part int, offset long")
-    return local.join(F.broadcast(off_df), on="part").select(
-        key_col,
-        (F.col("offset") + F.col("local_rank") - 1).cast("long").alias("id"),
+    counts = dict(
+        local.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()
     )
+    offsets, acc = [], 0
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(F.lit(acc))
+        acc += counts.get(p, 0)
+    offset = F.array(*offsets).cast("array<long>")[F.col("part")]
+    return local.select(key_col, (offset + F.col("local_rank") - 1).alias("id"))
 
 
 def normalize_ids(edges: DataFrame, key_cols: tuple[str, str] = ("src", "dst")):

@@ -12,7 +12,7 @@ Two graph sources:
 2. ``synth_code_table`` — a seeded synthetic source-code table with the
    exact BASELINE.json input_hint shape ``(repo, path, commit, lang,
    content)``; ``motive_spark.extract`` turns it into a repo-dependency
-   edge table (import extraction via Arrow UDF).  This is the shape the
+   edge table (import extraction by JVM regex).  This is the shape the
    engine targets at 10^12-file scale; the testdata graph is the
    correctness-gate shape.
 
@@ -106,7 +106,7 @@ def synth_code_table(
     (no Python in the generator): file i of repo r imports
     ``imports_per_file`` other repos chosen by hashing (r, i, j, seed).
     Every row's content embeds its import lines in the language's syntax
-    plus deterministic filler, so the Arrow-UDF extractor has realistic
+    plus deterministic filler, so the regex extractor has realistic
     text to parse and sha256(content) is a stable per-row invariant.
     """
     n = n_repos * files_per_repo

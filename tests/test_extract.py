@@ -5,8 +5,21 @@ sha256(content) carried per-row, vectorized extraction, dense ids.
 """
 
 import hashlib
+import random
+import re
 
 from pyspark.sql import functions as F
+
+# Python ``re`` patterns the JVM patterns of ``motive_spark.extract`` must
+# agree with: the reference for the equivalence tests below.
+_REF_PATTERNS = {
+    "python": re.compile(r"^\s*(?:import|from)\s+([A-Za-z_][\w]*)", re.M),
+    "java": re.compile(r"^\s*import\s+(?:static\s+)?([A-Za-z_][\w]*)", re.M),
+    "go": re.compile(r'^\s*(?:import\s+)?"([\w.\-]+)(?:/[\w./\-]*)?"', re.M),
+    "rust": re.compile(r"^\s*use\s+([A-Za-z_][\w]*)", re.M),
+    "cpp": re.compile(r'^\s*#\s*include\s+[<"]([\w\-]+)(?:/[\w./\-]*)?[>"]', re.M),
+}
+_REF_DEFAULT = re.compile(r"^\s*(?:import|include|use|require)\s+[\"'<]?([\w.\-]+)", re.M)
 
 
 def test_synth_code_table_shape_and_determinism(spark):
@@ -50,6 +63,96 @@ def test_import_extraction_per_language(spark):
     assert ("r3", "fmt") in got and ("r3", "github.com") in got
     assert ("r4", "serde") in got and ("r4", "tokio") in got
     assert ("r5", "vector") in got and ("r5", "mylib") in got
+
+
+def test_java_classes_keep_what_python_classes_keep(spark):
+    """One query over every non-surrogate code point: the extractor's
+    spelling of ``\\w`` and ``\\s`` keeps exactly the characters Python's
+    ``\\w`` and ``\\s`` keep, except code points this JVM's Unicode tables
+    leave unassigned (newer in Python's tables than in Java's)."""
+    from motive_spark.extract import _java
+
+    codes = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    text = "".join(map(chr, codes))
+    df = spark.createDataFrame([(text,)], "s string")
+
+    def kept(pattern):
+        return F.array_join(F.regexp_extract_all("s", F.lit(pattern), 0), "")
+
+    row = df.select(
+        kept(_java(r"\w")).alias("w"),
+        kept(_java(r"\s")).alias("s"),
+        kept(r"\p{Cn}").alias("unassigned"),
+    ).first()
+    unassigned = set(row["unassigned"])
+    assert "\u0378" in unassigned and not unassigned & set("a_ \u3000")
+    for cls, got in ((r"\w", row["w"]), (r"\s", row["s"])):
+        want = set(re.findall(cls, text))
+        diff = set(got) ^ want
+        assert diff <= unassigned, (cls, sorted(map(ord, diff - unassigned))[:20])
+        assert len(got) == len(set(got))  # each code point kept once
+
+
+def _fuzz_code_rows(n_rows, seed):
+    """Code-table rows crafted to split Python's and Java's regex
+    semantics: line breaks other than \\n, Unicode spaces, non-ASCII
+    identifiers, combining marks, repeated and indented imports."""
+    langs = ["python", "java", "go", "rust", "cpp", "kotlin", None]
+    tokens = [
+        "import", "from", "use", "include", "require", "static", "#",
+        " ", "  ", "\t", "\n", "\n", "\r", "\r\n", "\x0b", "\x0c",
+        "\x1c", "\x1d", "\x1e", "\x1f", "\xa0", "\u3000", "\u2028",
+        "\x85", "\u200b", "\u200d", "\u0301", "\u180e",
+        "café", "x²", "éx", "ǅz", "٣", "Ⅻ", "foo", "Bar9", "_q",
+        '"', "'", "<", ">", "/", ".", "-", "::", ";", "(",
+    ]
+    fixed = [
+        "import foo\r\nimport bar\rimport baz\n",
+        "\x1cimport sep1\n\x1f\x1eimport sep2",
+        "\xa0\xa0import nbsp\n\u3000use ideo;",
+        "import café\nimport x²\nimport éx\nuse ǅz",
+        "import dup\nimport dup\n    import dup\n\timport other",
+        '#include <vec>\n  #  include "lib/a.h"\n#include <vec>',
+        '\t"github.com/x/y"\nimport "fmt"\n"naïve.io/p"',
+        "import static org.x;\n  import java.util;",
+        "require 'gem'\ninclude <sys>\nuse strict;",
+    ]
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n_rows):
+        if i < len(fixed) * len(langs):
+            content = fixed[i // len(langs)]
+        else:
+            content = "".join(rng.choice(tokens) for _ in range(rng.randint(0, 40)))
+        rows.append((f"r{i % 5}", f"f{i}", langs[i % len(langs)], content))
+    rows += [("r0", "null_py", "python", None), ("r0", "null_x", None, None)]
+    return rows
+
+
+def test_extract_imports_matches_python_re(spark):
+    """``extract_imports`` returns, per file, exactly the distinct
+    modules ``re.findall`` finds with the reference patterns."""
+    from motive_spark.extract import extract_imports
+
+    rows = _fuzz_code_rows(600, seed=11)
+    code = spark.createDataFrame(
+        rows, "repo string, path string, lang string, content string"
+    )
+    got = {}
+    for r in extract_imports(code).collect():
+        got.setdefault(r.path, []).append(r.module)
+    want = {}
+    for _repo, path, lang, content in rows:
+        if content is not None:
+            mods = _REF_PATTERNS.get(lang, _REF_DEFAULT).findall(content)
+            if mods:
+                want[path] = sorted(set(mods))
+    assert {p: sorted(m) for p, m in got.items()} == want
+    assert all(len(m) == len(set(m)) for m in got.values())  # distinct per file
+    # the crafted rows exercise the cases they were written for
+    assert {"foo", "bar", "sep1", "nbsp", "café", "x²", "éx", "dup"} <= {
+        m for ms in want.values() for m in ms
+    }
 
 
 def test_repo_edges_and_dense_ids(spark):
@@ -214,3 +317,56 @@ def test_code_table_from_docs_pipeline(spark, sf_tiny):
     edges = repo_edges(code).collect()
     assert edges and all(r.src_repo != r.dst_repo for r in edges)
     assert all(r.n_files >= 1 for r in edges)
+
+    # row for row what the contract's DuckDB oracle derives from the
+    # generative formula
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_tiny}/documents.parquet')"
+    )
+    want = [tuple(r) for r in con.execute(em._CODE_EDGES_SQL).fetchall()]
+    got = sorted((r.src_repo, r.dst_repo, r.n_files) for r in edges)
+    assert got == want
+
+
+def test_dense_edge_table_extracts_once(spark):
+    """``dense_edge_table`` scans the code table once, in the JVM: a job
+    ceiling, no Python evaluation node, no extraction left in either
+    returned plan, and no cached intermediate left behind."""
+    from motive_spark.extract import dense_edge_table, repo_edges
+    from motive_spark.tables import synth_code_table
+
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    code = synth_code_table(spark, 16, 8, 2, seed=1)
+
+    plan = repo_edges(code)._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    group = "dense_edge_table_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        dense, vmap = dense_edge_table(code)
+        dense.count(), vmap.count()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 18 at local[2], local[4] and local[8]; extracting three times took 22
+    assert jobs <= 18, jobs
+
+    held = set()
+    for df in (dense, vmap):
+        qe = df._jdf.queryExecution()
+        for text in (qe.analyzed().toString(), qe.executedPlan().toString()):
+            assert "regexp_extract_all" not in text and "EvalPython" not in text
+        leaves = qe.analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD":
+                held.add(leaves.apply(i).rdd().id())
+    grown = set(jsc.getPersistentRDDs().keySet().toArray()) - before
+    assert len(grown) <= 2 and grown <= held, (grown, held)

@@ -340,13 +340,32 @@ def test_fibonacci_search_finds_no_worse_cutoff(spark):
     assert best.canon == clique4 and best.factor > 0
 
 
+def _same_scores(got, want):
+    assert set(got) == set(want)
+    for key, d in got.items():
+        lo = want[key]
+        for fld in [
+            "n_occurrences", "size_er", "size_el", "factor_er",
+            "factor_el", "common_bits", "m_sub_graph", "n_sub",
+        ]:
+            assert d[fld] == lo[fld] or abs(d[fld] - lo[fld]) < 1e-9, (
+                key, fld, d[fld], lo[fld])
+        assert sorted(map(tuple, d["subbed_hist"] or [])) == sorted(
+            map(tuple, lo["subbed_hist"] or [])
+        ), key
+
+
 @pytest.mark.parametrize("directed", [False, True])
-def test_local_scoring_matches_distributed(spark, directed):
+def test_local_scoring_matches_distributed(spark, directed, monkeypatch):
     """The driver-local fast path and the scale-out instance-loop plan
     share `_assemble_motif`; this pins that their relational preps agree
     too — including on mixed-k extractions where canonical masks collide
-    across sizes."""
+    across sizes.  ``strategy="auto"`` is pinned on both sides of
+    ``LOCAL_SCORE_THRESHOLD``, in ``score_motifs`` and in the Fibonacci
+    search, by a spy on the local scorer."""
+    from motive_spark.mdl import score as score_mod
     from motive_spark.mdl.score import score_motifs
+    from motive_spark.mdl.search import size_with_search
     from motive_spark.motifs import MotifExtractor
 
     pairs = random_pairs(60, 300, seed=4, directed=directed)
@@ -375,17 +394,47 @@ def test_local_scoring_matches_distributed(spark, directed):
         # the directed fixture (the bug this guards: k=3/k=4 pooled)
         canons = [c for c, _k in dist]
         assert len(canons) > len(set(canons)), "fixture no longer collides"
-    for key, d in dist.items():
-        lo = loc[key]
-        for fld in [
-            "n_occurrences", "size_er", "size_el", "factor_er",
-            "factor_el", "common_bits", "m_sub_graph", "n_sub",
-        ]:
-            assert d[fld] == lo[fld] or abs(d[fld] - lo[fld]) < 1e-9, (
-                key, fld, d[fld], lo[fld])
-        assert sorted(map(tuple, d["subbed_hist"] or [])) == sorted(
-            map(tuple, lo["subbed_hist"] or [])
-        ), key
+    _same_scores(dist, loc)
+
+    def searched(strategy):
+        return {
+            (int(r["canon"]), int(r["k"]), r["model"]): (r["cutoff"], r["size"])
+            for r in size_with_search(
+                edges, occ, directed=directed, model=("er", "el"),
+                max_depth=0, strategy=strategy,
+            ).collect()
+        }
+
+    took_local = []
+    real_local = score_mod.score_groups_local
+
+    def spy(*args, **kwargs):
+        took_local.append(True)
+        return real_local(*args, **kwargs)
+
+    monkeypatch.setattr(score_mod, "score_groups_local", spy)
+    m = len(pairs)  # simple edges: random_pairs has no loops or repeats
+    # one search round; both sides must agree with the forced local search
+    want = searched("local")
+    # auto is local iff m <= threshold
+    for threshold, side, forced in ((m - 1, "distributed", dist), (m, "local", loc)):
+        monkeypatch.setattr(score_mod, "LOCAL_SCORE_THRESHOLD", threshold)
+        took_local.clear()
+        auto = {
+            (int(r["canon"]), int(r["k"])): r
+            for r in score_motifs(
+                edges, occ, directed=directed, strategy="auto", _with_hists=True
+            ).collect()
+        }
+        assert bool(took_local) == (side == "local"), (threshold, side)
+        _same_scores(auto, forced)
+
+        took_local.clear()
+        auto_search = searched("auto")
+        assert bool(took_local) == (side == "local"), (threshold, side)
+        assert set(auto_search) == set(want) and len(want) > 5
+        for key, (cutoff, size) in auto_search.items():
+            assert cutoff == want[key][0] and abs(size - want[key][1]) < 1e-9, key
 
 
 def test_extractor_selection_disjoint_per_canon_and_k(spark):
