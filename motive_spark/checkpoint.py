@@ -145,9 +145,14 @@ class CheckpointManager:
         ``df.unpersist()`` is a no-op; reach the RDD through the analyzed
         plan instead.  Without this, long iterative runs accumulate
         checkpoint blocks until the driver GC + ContextCleaner catch up
-        (verified: storage grows monotonically)."""
+        (verified: storage grows monotonically).  ``df`` may also be a
+        chain of single-input operators (select, where) over the
+        checkpoint; the checkpoint at its bottom is freed."""
         try:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            plan = df._jdf.queryExecution().analyzed()
+            while plan.children().size() == 1:
+                plan = plan.children().head()
+            plan.rdd().unpersist(False)
         except Exception:  # noqa: BLE001 — freeing is best-effort
             pass
 

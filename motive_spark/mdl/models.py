@@ -60,12 +60,21 @@ def _degree_hist_entropy_bits(deg_values, deg_counts):
     return float(prefix_bits(mx) + h)
 
 
+def _hist_arrays(hist: dict[int, int]):
+    """(degrees, counts) as float arrays in ascending degree order, so a
+    histogram's codelength does not depend on the order its dict was
+    filled in (float sums are not associative)."""
+    items = sorted(hist.items())
+    return (
+        np.array([d for d, _ in items], dtype=np.float64),
+        np.array([c for _, c in items], dtype=np.float64),
+    )
+
+
 def el_bits_directed(in_hist: dict[int, int], out_hist: dict[int, int], m: int):
     """EL codelength, directed.  ``in_hist``/``out_hist``: degree→count."""
-    iv = np.array(list(in_hist.keys()), dtype=np.float64)
-    ic = np.array(list(in_hist.values()), dtype=np.float64)
-    ov = np.array(list(out_hist.keys()), dtype=np.float64)
-    oc = np.array(list(out_hist.values()), dtype=np.float64)
+    iv, ic = _hist_arrays(in_hist)
+    ov, oc = _hist_arrays(out_hist)
     seq_bits = _degree_hist_entropy_bits(iv, ic) + _degree_hist_entropy_bits(ov, oc)
     graph_bits = (
         log2_factorial(m)
@@ -77,8 +86,7 @@ def el_bits_directed(in_hist: dict[int, int], out_hist: dict[int, int], m: int):
 
 def el_bits_undirected(hist: dict[int, int], m: int):
     """EL codelength, undirected.  ``hist``: degree→count."""
-    dv = np.array(list(hist.keys()), dtype=np.float64)
-    dc = np.array(list(hist.values()), dtype=np.float64)
+    dv, dc = _hist_arrays(hist)
     seq_bits = _degree_hist_entropy_bits(dv, dc)
     graph_bits = (
         log2_factorial(2 * m)

@@ -33,9 +33,13 @@ gets the subbed degree histograms back as bounded array columns.
 
 from __future__ import annotations
 
+import collections
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from motive_spark.mdl import codes
 from motive_spark.mdl.models import (
@@ -119,29 +123,22 @@ def precompute_globals(
     # (degree, count) rows, bounded by the max degree, never the |V|-row
     # per-vertex table (a wiki-scale graph has 10^7 vertices but ~10^4
     # distinct degrees)
-    def _hist(col):
-        return {
-            int(r[0]): int(r[1])
-            for r in deg.groupBy(F.col(col).alias("d")).count().collect()
-        }
+    # (histograms are dicts in ascending key order, whatever order the
+    # collect returned, so every consumer iterates them the same way)
+    def _hist(*cols):
+        out = {}
+        for r in deg.groupBy(*cols).count().collect():
+            key = tuple(int(x) for x in r[:-1])
+            out[key if len(cols) > 1 else key[0]] = int(r[-1])
+        return dict(sorted(out.items()))
 
     if directed:
         hists = (_hist("in_deg"), _hist("out_deg"))
         # joint (in, out) histogram — the digraph count under the DS/Beta
         # model depends on the multiset of degree PAIRS, not the marginals
-        joint = {
-            (int(r[0]), int(r[1])): int(r[2])
-            for r in deg.groupBy("in_deg", "out_deg").count().collect()
-        }
+        joint = _hist("in_deg", "out_deg")
     else:
-        hists = {
-            int(r[0]): int(r[1])
-            for r in deg.groupBy(
-                (F.col("in_deg") + F.col("out_deg")).alias("d")
-            )
-            .count()
-            .collect()
-        }
+        hists = _hist((F.col("in_deg") + F.col("out_deg")).alias("d"))
         joint = hists
     return {
         "e": e,
@@ -161,6 +158,168 @@ def precompute_globals(
 LOCAL_SCORE_THRESHOLD = 50_000
 
 
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+# the numpy dtype of each integral Spark type, as toPandas would give it
+_NP_INT = {T.ByteType: np.int8, T.ShortType: np.int16, T.IntegerType: np.int32,
+           T.LongType: np.int64}
+
+
+def _integral_ids(edges: DataFrame) -> bool:
+    return all(isinstance(edges.schema[c].dataType, _INTEGRAL) for c in ("src", "dst"))
+
+
+def local_edges(edges: DataFrame, strategy: str) -> pd.DataFrame | None:
+    """The edge table as pandas ``(src, dst[, mult])`` when the
+    driver-local regime applies, else None.
+
+    The local regime needs non-null integral ids (and ``mult``).
+    ``auto`` reads at most ``LOCAL_SCORE_THRESHOLD + 1`` rows — one
+    bounded probe — and gives up above the threshold; ``local`` reads
+    the whole table and raises on ids it cannot use; ``distributed``
+    reads nothing.  Raw rows bound simple edges from above, so a table
+    that passes the probe also passes the scorer's simple-edge switch.
+
+    The probe collects rows, not ``toPandas``: Arrow's first use in a
+    JVM loads and compiles its classes, which costs more than decoding
+    the probe's rows and varies from run to run.  The columns keep the
+    dtypes ``toPandas`` gives (``int32`` for int ids).
+    """
+    if strategy not in ("auto", "local", "distributed"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy == "distributed":
+        return None
+    ok = _integral_ids(edges)
+    pdf = None
+    if ok:
+        cols = [F.col("src"), F.col("dst")]
+        if "mult" in edges.columns:
+            cols.append(F.col("mult").cast("long"))
+        probe = edges.select(*cols)
+        if strategy == "auto":
+            probe = probe.limit(LOCAL_SCORE_THRESHOLD + 1)
+        # through the plan's RDD: one job whatever the partition count
+        # (``collect`` on a limit scans one partition, then 4x more, ...
+        # job by job); rows are pickled in the JVM, no Python worker runs
+        rows = probe.rdd.collect()
+        if strategy == "auto" and len(rows) > LOCAL_SCORE_THRESHOLD:
+            return None
+        fields = probe.schema.fields
+        values = list(zip(*rows)) if rows else [()] * len(fields)
+        ok = not any(None in v for v in values)
+        if ok:
+            pdf = pd.DataFrame({
+                f.name: np.fromiter(v, dtype=_NP_INT[type(f.dataType)], count=len(v))
+                for f, v in zip(fields, values)
+            })
+    if not ok and strategy == "local":
+        raise ValueError("the local regime needs non-null integral src/dst ids")
+    return pdf if ok else None
+
+
+def _local_graph(e_rows: list, deg_map: dict) -> tuple:
+    """``pc["_local"]``: the simple edge rows in (src, dst) order, the
+    per-vertex (in, out) degrees and each vertex's incident row indices."""
+    e_rows = sorted(e_rows)
+    incident: dict[int, list[int]] = {}
+    for i, (s, d, _mu) in enumerate(e_rows):
+        incident.setdefault(s, []).append(i)
+        if d != s:
+            incident.setdefault(d, []).append(i)
+    return e_rows, deg_map, incident
+
+
+def local_globals(pdf: pd.DataFrame, directed: bool, simplify: bool = True) -> dict:
+    """:func:`precompute_globals` on the driver, from the pandas edge
+    table of :func:`local_edges`: the same ``n``, ``m``, histograms,
+    joint histogram and baselines, plus the ``_local`` tables the local
+    scorer reads, and no Spark frames (``e`` and ``deg`` are None)."""
+    src = pdf["src"].to_numpy(dtype=np.int64)
+    dst = pdf["dst"].to_numpy(dtype=np.int64)
+    mult = (
+        pdf["mult"].to_numpy(dtype=np.int64) if "mult" in pdf.columns
+        else np.ones(len(src), dtype=np.int64)
+    )
+    keep = src != dst
+    src, dst, mult = src[keep], dst[keep], mult[keep]
+    if not directed:
+        src, dst = np.minimum(src, dst), np.maximum(src, dst)
+    e = pd.DataFrame({"src": src, "dst": dst, "mult": mult})
+    if simplify:
+        e = e[["src", "dst"]].drop_duplicates().assign(mult=np.int64(1))
+    else:
+        e = e.groupby(["src", "dst"], as_index=False, sort=False)["mult"].sum()
+    deg = pd.concat(
+        [e["dst"].value_counts().rename("in_deg"),
+         e["src"].value_counts().rename("out_deg")],
+        axis=1,
+    ).fillna(0).astype(np.int64).sort_index()
+
+    def _hist(keys):
+        return dict(sorted(collections.Counter(keys).items()))
+
+    in_d, out_d = deg["in_deg"].tolist(), deg["out_deg"].tolist()
+    if directed:
+        hists = (_hist(in_d), _hist(out_d))
+        joint = _hist(zip(in_d, out_d))
+    else:
+        hists = _hist(a + b for a, b in zip(in_d, out_d))
+        joint = hists
+    n, m = len(deg), len(e)
+    return {
+        "e": None,
+        "deg": None,
+        "n": n,
+        "m": m,
+        "hists": hists,
+        "joint": joint,
+        "base": _baselines(n, m, hists, directed),
+        "_local": _local_graph(
+            list(zip(e["src"].tolist(), e["dst"].tolist(), e["mult"].tolist())),
+            dict(zip(deg.index.tolist(), zip(in_d, out_d))),
+        ),
+    }
+
+
+def resolve_globals(
+    edges: DataFrame,
+    directed: bool,
+    simplify: bool,
+    strategy: str,
+    edges_pdf: pd.DataFrame | None = None,
+) -> tuple[dict, str]:
+    """(globals, scorer side) for ``strategy`` auto|local|distributed.
+
+    The local regime (see :func:`local_edges`; ``edges_pdf`` passes in
+    an edge table already read) computes the globals on the driver.
+    Otherwise :func:`precompute_globals` runs distributed, and ``auto``
+    still scores locally when the simple-edge count ``m`` is at most
+    ``LOCAL_SCORE_THRESHOLD`` (a table with many duplicate rows)."""
+    if edges_pdf is None:
+        edges_pdf = local_edges(edges, strategy)
+    if edges_pdf is not None:
+        return local_globals(edges_pdf, directed, simplify), "local"
+    pc = precompute_globals(edges, directed, simplify)
+    if strategy == "auto":
+        small = pc["m"] <= LOCAL_SCORE_THRESHOLD and _integral_ids(edges)
+        strategy = "local" if small else "distributed"
+    return pc, strategy
+
+
+def release_globals(pc: dict) -> None:
+    """Free the frames :func:`precompute_globals` cached (none locally)."""
+    for key in ("e", "deg"):
+        if pc[key] is not None:
+            pc[key].unpersist()
+
+
+def frame_from_rows(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame of driver-side rows, built from pandas through Arrow:
+    a local relation that starts no Python worker when evaluated (the
+    list form of ``createDataFrame`` goes through a Python RDD)."""
+    names = [f.name for f in T._parse_datatype_string(schema).fields]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
 def _ensure_local_graph(pc: dict) -> tuple:
     """Collect the (small, <= threshold by contract) simple edge table and
     per-vertex degrees ONCE into the precompute dict; reused by every
@@ -174,12 +333,7 @@ def _ensure_local_graph(pc: dict) -> tuple:
             int(r["id"]): (int(r["in_deg"]), int(r["out_deg"]))
             for r in pc["deg"].collect()
         }
-        incident: dict[int, list[int]] = {}
-        for i, (s, d, _mu) in enumerate(e_rows):
-            incident.setdefault(s, []).append(i)
-            if d != s:
-                incident.setdefault(d, []).append(i)
-        pc["_local"] = (e_rows, deg_map, incident)
+        pc["_local"] = _local_graph(e_rows, deg_map)
     return pc["_local"]
 
 
@@ -211,8 +365,6 @@ def score_groups_local(
         "with_hists": with_hists,
         "max_rw": max_rw,
     }
-    import numpy as np
-
     rows = []
     for canon, k, mask, occs in groups:
         member: dict[int, tuple[int, int, int]] = {}
@@ -373,15 +525,14 @@ def score_motifs(
             )
             canon_restore = {i: c for (c, _kk), i in gidx.items()}
 
-    pc = (
-        precomputed
-        if precomputed is not None
-        else precompute_globals(edges, directed, simplify)
-    )
-    if strategy == "auto":
-        strategy = (
-            "local" if pc["m"] <= LOCAL_SCORE_THRESHOLD else "distributed"
-        )
+    if precomputed is None:
+        pc, strategy = resolve_globals(edges, directed, simplify, strategy)
+    else:
+        pc = precomputed
+        if strategy == "auto":
+            strategy = (
+                "local" if pc["m"] <= LOCAL_SCORE_THRESHOLD else "distributed"
+            )
     if strategy == "local":
         occ_rows = occurrences.select(
             "canon", "k", "occ_id", "vertices", "mask"
@@ -414,13 +565,12 @@ def score_motifs(
                 "subbed_hist array<array<long>>"
             )
         if precomputed is None:
-            pc["e"].unpersist()
-            pc["deg"].unpersist()
+            release_globals(pc)
         if canon_restore is not None:
             for r in rows:
                 r["canon"] = canon_restore[r["canon"]]
-        return spark.createDataFrame(
-            [tuple(r.get(c) for c in out_cols) for r in rows], out_schema
+        return frame_from_rows(
+            spark, [tuple(r.get(c) for c in out_cols) for r in rows], out_schema
         )
     e, deg = pc["e"], pc["deg"]
     n, m = pc["n"], pc["m"]
@@ -886,8 +1036,6 @@ def _assemble_motif(
 ) -> dict:
     """Pure per-motif codelength assembly, run inside applyInPandas.
     Input frames are that motif's slices only (bounded by max_rw)."""
-    import numpy as np
-
     n, m = consts["n"], consts["m"]
     hists, base = consts["hists"], consts["base"]
     directed = consts["directed"]
@@ -911,8 +1059,11 @@ def _assemble_motif(
     medges = mask_to_edges(mask, k, directed)
     m_motif = len(medges)
 
+    # float sums below run in a fixed row order, whatever order a shuffle
+    # or a dict delivered the rows in
     if consts["reset_wiring"]:
         wiring = 0.0
+        anchors = anchors.sort_values(["occ_id", "pos"], kind="mergesort")
         for _, grp in anchors.groupby("occ_id"):
             wiring += codes.online_multiset_bits(grp["cnt"].to_numpy(), k)
     else:

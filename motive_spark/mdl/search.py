@@ -7,23 +7,40 @@ answer = min over everything sampled.
 
 Control flow lives on the driver (a dict of per-motif search states);
 every ROUND batches all motifs' pending (motif, cutoff) evaluations into
-ONE score_motifs pass keyed by a synthetic group id — the reference's
-thread-per-motif boundary becomes round-batched DataFrame jobs
+ONE scoring pass keyed by a synthetic group id — the reference's
+thread-per-motif boundary becomes round-batched evaluation
 (SURVEY §3.5).  Rounds ≈ O(log_phi max_occurrences).
 
+Two regimes, chosen by ``strategy`` through ``score.resolve_globals``:
+
+* **local** (at most ``LOCAL_SCORE_THRESHOLD`` edge rows, non-null
+  integral ids; ``auto`` decides with one bounded read of the edges):
+  the globals (n, m, degree histograms, baselines) come from the edges
+  read on the driver, the occurrences are ranked in pandas, and every
+  round is ``score_groups_local`` arithmetic — no Spark job after the
+  edge read.  ``fast_experiment`` hands in the edges and occurrences
+  its extractor already holds, so the search reads nothing at all.
+* **distributed**: ``precompute_globals`` caches the simple edge table
+  and degrees, occurrences are ranked with a window, and each round is
+  one ``score_motifs`` pass (still scored on the driver when ``auto``
+  finds at most the threshold of simple edges).
+
 Occurrence order is the extractor's deterministic selection order
-(exDegree asc, occ_id) — the reference's occurrences(sub) order.
+(exDegree asc, occ_id) — the reference's occurrences(sub) order.  The
+result is a local relation built from pandas (or the pandas frame
+itself, for ``fast_experiment``).
 """
 
 from __future__ import annotations
 
-import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from motive_spark.checkpoint import CheckpointManager
 from motive_spark.mdl import codes
 from motive_spark.mdl.models import el_bits_directed, el_bits_undirected, er_bits
-from motive_spark.mdl.score import score_motifs
+from motive_spark.mdl.score import frame_from_rows, score_motifs
 from motive_spark.motifs.canon import mask_to_edges
 
 _FIBS = [1, 1]
@@ -82,9 +99,13 @@ def _zero_occurrence_size(n, m, hists, mask, k, directed, model):
     return sub + subbed + labels + multi  # wiring 0, insertions 0
 
 
+_OCC_COLS = ["canon", "k", "occ_id", "vertices", "mask", "ex_degree"]
+_RESULT_COLS = ["canon", "k", "model", "cutoff", "size", "factor"]
+
+
 def size_with_search(
     edges: DataFrame,
-    occurrences: DataFrame,
+    occurrences: DataFrame | pd.DataFrame,
     directed: bool = True,
     model: str | tuple[str, ...] = "er",
     max_depth: int = -1,
@@ -96,7 +117,9 @@ def size_with_search(
     max_rw: int = 500_000,
     simplify: bool = True,
     strategy: str = "auto",
-) -> DataFrame:
+    _edges_pdf: pd.DataFrame | None = None,
+    _pandas: bool = False,
+) -> DataFrame | pd.DataFrame:
     """Per-motif optimal (cutoff, size, factor) under ``model`` — "er",
     "el", "beta", or a tuple.  All requested models share every batched
     evaluation round (one score_motifs pass returns the structural terms
@@ -108,33 +131,64 @@ def size_with_search(
     ``beta_depth`` (None → ``max_depth``) because every evaluation pays a
     fan-out MC sampling pass over the subbed degree sequence.
 
-    Returns (canon, k, model, cutoff, size, factor).
+    ``occurrences`` may be a pandas frame of the extractor's columns;
+    ``_edges_pdf`` passes in the edge table already read on the driver
+    (the local regime).  ``strategy`` is auto|local|distributed, see the
+    module docstring.
+
+    Returns (canon, k, model, cutoff, size, factor); as a pandas frame
+    with ``_pandas``, which skips building a frame in the JVM only to
+    collect it again.
     """
     spark = edges.sparkSession
     models = (model,) if isinstance(model, str) else tuple(model)
     with_beta = "beta" in models
 
-    # ranks and ALL search state key on (canon, k): canonical masks
-    # collide across motif sizes, so canon alone would merge classes
-    w = Window.partitionBy("canon", "k").orderBy("ex_degree", "occ_id")
-    ranked = occurrences.withColumn("occ_rank", F.row_number().over(w)).cache()
-    motif_info = {
-        (int(r["canon"]), int(r["k"])): (
-            int(r["k"]), int(r["mask"]), int(r["n_occ"])
-        )
-        for r in ranked.groupBy("canon", "k")
-        .agg(F.first("mask").alias("mask"), F.count(F.lit(1)).alias("n_occ"))
-        .collect()
-    }
-
     # global stats for the zero-cutoff closed form and the baselines —
-    # computed ONCE and shared by every scoring round (precompute_globals)
-    from motive_spark.mdl.score import precompute_globals
+    # computed ONCE and shared by every scoring round; in the local
+    # regime from the edges read on the driver
+    from motive_spark.mdl.score import release_globals, resolve_globals
 
-    pc = precompute_globals(edges, directed, simplify)
+    pc, strategy = resolve_globals(edges, directed, simplify, strategy, _edges_pdf)
     e, n, m = pc["e"], pc["n"], pc["m"]
     hists = pc["hists"]
     baselines = dict(pc["base"])
+
+    # ranks and ALL search state key on (canon, k): canonical masks
+    # collide across motif sizes, so canon alone would merge classes.
+    # A motif's mask is its first-ranked occurrence's.
+    local_occ: dict[tuple[int, int], list[tuple[int, list[int]]]] = {}
+    if strategy == "local":
+        # rank order + occurrence lists on the driver ONCE; every search
+        # round then costs pure numpy, no Spark jobs at all
+        occ = occurrences
+        if isinstance(occ, DataFrame):
+            occ = occ.select(*_OCC_COLS).toPandas()
+        occ = occ.sort_values(["canon", "k", "ex_degree", "occ_id"], kind="mergesort")
+        motif_info = {}
+        for (cn, kk), grp in occ.groupby(["canon", "k"], sort=False):
+            ck = (int(cn), int(kk))
+            motif_info[ck] = (int(kk), int(grp["mask"].iat[0]), len(grp))
+            local_occ[ck] = [
+                (int(o), [int(v) for v in vs])
+                for o, vs in zip(grp["occ_id"], grp["vertices"])
+            ]
+    else:
+        if isinstance(occurrences, pd.DataFrame):
+            occurrences = spark.createDataFrame(occurrences[_OCC_COLS])
+        w = Window.partitionBy("canon", "k").orderBy("ex_degree", "occ_id")
+        ranked = occurrences.withColumn("occ_rank", F.row_number().over(w)).cache()
+        motif_info = {
+            (int(r["canon"]), int(r["k"])): (
+                int(r["k"]), int(r["mask"]), int(r["n_occ"])
+            )
+            for r in ranked.groupBy("canon", "k")
+            .agg(
+                F.min_by("mask", "occ_rank").alias("mask"),
+                F.count(F.lit(1)).alias("n_occ"),
+            )
+            .collect()
+        }
 
     sub_beta: dict[tuple[int, int], float] = {}
     if with_beta:
@@ -194,29 +248,7 @@ def size_with_search(
             return beta_depth
         return max_depth
 
-    # local evaluation mode: below the threshold, rank order + occurrence
-    # lists are collected ONCE and every search round costs pure numpy
-    # (no Spark jobs at all) — the per-round fixed overhead (3 cache
-    # materializations + ~8 jobs per score_motifs pass) was what made a
-    # 40-vertex `--type fast` run take minutes
-    from motive_spark.mdl.score import (
-        LOCAL_SCORE_THRESHOLD,
-        score_groups_local,
-    )
-
-    if strategy == "auto":
-        strategy = "local" if m <= LOCAL_SCORE_THRESHOLD else "distributed"
-    local_occ: dict[tuple[int, int], list[tuple[int, list[int]]]] = {}
-    if strategy == "local":
-        for r in ranked.select(
-            "canon", "k", "occ_id", "vertices", "occ_rank"
-        ).collect():
-            local_occ.setdefault((int(r["canon"]), int(r["k"])), []).append(
-                (int(r["occ_rank"]), int(r["occ_id"]),
-                 [int(v) for v in r["vertices"]])
-            )
-        for lst in local_occ.values():
-            lst.sort()
+    from motive_spark.mdl.score import score_groups_local
 
     while True:
         pending: set[tuple[tuple[int, int], int]] = set()
@@ -246,7 +278,7 @@ def size_with_search(
                         canon_idx[ck] * _GID_BASE + ct,
                         motif_info[ck][0],
                         motif_info[ck][1],
-                        [(oid, vs) for rk, oid, vs in local_occ[ck][:ct]],
+                        local_occ[ck][:ct],
                     )
                     for ck, ct in sorted(pending)
                 ]
@@ -254,7 +286,8 @@ def size_with_search(
                     groups, pc, directed, reset_wiring, max_rw, with_beta
                 )
             else:
-                pend_df = spark.createDataFrame(
+                pend_df = frame_from_rows(
+                    spark,
                     [
                         (cn, kk, ct, canon_idx[(cn, kk)] * _GID_BASE + ct)
                         for (cn, kk), ct in sorted(pending)
@@ -264,7 +297,7 @@ def size_with_search(
                 subset = ranked.join(pend_df, on=["canon", "k"]).where(
                     F.col("occ_rank") <= F.col("cutoff")
                 )
-                res = score_motifs(
+                scored = score_motifs(
                     e,
                     subset.select(
                         "gid", "k", "occ_id", "vertices", "mask", "ex_degree"
@@ -276,7 +309,9 @@ def size_with_search(
                     max_rw=max_rw,
                     strategy="distributed",
                     _with_hists=with_beta,
-                ).collect()
+                )
+                res = scored.collect()
+                CheckpointManager._release(scored)
             beta_rows: list[tuple[tuple[int, int], int, dict]] = []
             for r in res:
                 idx, cutoff = divmod(int(r["canon"]), _GID_BASE)
@@ -338,16 +373,18 @@ def size_with_search(
 
     rows = []
     for mo in models:
-        for ck, (k, mask, n_occ) in motif_info.items():
+        for ck, (k, mask, n_occ) in sorted(motif_info.items()):
             sizes = {c: v for (cc, c), v in cache[mo].items() if cc == ck}
             best_c = min(sizes, key=lambda c: (sizes[c], c))
             rows.append(
                 (ck[0], k, mo, best_c, sizes[best_c], baselines[mo] - sizes[best_c])
             )
-    ranked.unpersist()
-    pc["e"].unpersist()
-    pc["deg"].unpersist()
-    return spark.createDataFrame(
-        rows,
+    if strategy != "local":
+        ranked.unpersist()
+    release_globals(pc)
+    if _pandas:
+        return pd.DataFrame.from_records(rows, columns=_RESULT_COLS)
+    return frame_from_rows(
+        spark, rows,
         "canon long, k int, model string, cutoff long, size double, factor double",
     )

@@ -39,6 +39,27 @@ def test_online_code_equals_sequential_fold():
         assert math.isclose(bits, closed, abs_tol=1e-9), (seq, bits, closed)
 
 
+def test_el_bits_independent_of_histogram_order():
+    """The EL codelength of a degree histogram does not depend on the
+    order its dict was filled in (a collect's row order): the float sums
+    run in ascending degree order."""
+    from motive_spark.mdl.models import el_bits_directed, el_bits_undirected
+
+    for seed in range(10):
+        rng = random.Random(seed)
+        hist = {d: rng.randint(1, 400) for d in rng.sample(range(1, 300), 40)}
+        m = sum(d * c for d, c in hist.items()) // 2
+        items = list(hist.items())
+        got = set()
+        for _ in range(10):
+            rng.shuffle(items)
+            got.add((
+                el_bits_undirected(dict(items), m),
+                el_bits_directed(dict(items), dict(reversed(items)), m),
+            ))
+        assert len(got) == 1, (seed, got)
+
+
 def test_log2_primitives():
     from motive_spark.mdl.codes import log2_choose, log2_factorial, prefix_bits
 
@@ -525,3 +546,75 @@ def test_labeled_scoring_term_and_warning(spark):
             assert lo["factor_el"] > s["factor_el"]
             checked += 1
     assert checked >= 1
+
+
+@pytest.mark.parametrize("directed", [False, True])
+@pytest.mark.parametrize("simplify", [True, False])
+def test_local_globals_match_precompute_globals(spark, directed, simplify):
+    """The driver-local globals equal ``precompute_globals``' n, m,
+    histograms (in the same ascending key order), joint histogram and
+    baselines, and the local scorer's edge/degree tables — on a graph
+    with self-loops, repeated and reversed edges, and with a ``mult``
+    column when not simplifying."""
+    from motive_spark.mdl.score import (
+        _ensure_local_graph,
+        local_edges,
+        local_globals,
+        precompute_globals,
+        release_globals,
+    )
+
+    rng = random.Random(3)
+    pairs = random_pairs(50, 200, seed=6, directed=directed)
+    pairs += [(1, 2), (1, 2), (2, 1), (3, 3), (7, 7), (9, 4)]
+    if simplify:
+        edges = edges_df(spark, pairs)
+    else:
+        edges = spark.createDataFrame(
+            [(a, b, rng.randint(1, 3)) for a, b in pairs],
+            "src long, dst long, mult long",
+        )
+    pc = precompute_globals(edges, directed, simplify)
+    try:
+        loc = local_globals(local_edges(edges, "local"), directed, simplify)
+        for key in ("n", "m", "hists", "joint", "base"):
+            assert loc[key] == pc[key], key
+        hists = pc["hists"] if directed else (pc["hists"],)
+        for h, lh in zip(hists, loc["hists"] if directed else (loc["hists"],)):
+            assert list(h.items()) == list(lh.items())
+        assert loc["_local"] == _ensure_local_graph(pc)
+        assert loc["e"] is None and loc["deg"] is None
+    finally:
+        release_globals(pc)
+
+
+def test_resolve_globals_auto_both_sides(spark, monkeypatch):
+    """``auto`` reads the edges on the driver iff there are at most
+    ``LOCAL_SCORE_THRESHOLD`` raw rows; between the simple-edge count m
+    and the raw row count it computes the globals distributed and still
+    scores locally; below m it scores distributed."""
+    from motive_spark.mdl import score as score_mod
+
+    pairs = random_pairs(40, 150, seed=2)
+    raw = pairs + pairs[:30] + [(5, 5)]
+    m, rows = len(pairs), len(raw)
+    edges = edges_df(spark, raw)
+    ran = []
+    for name in ("local_globals", "precompute_globals"):
+        real = getattr(score_mod, name)
+        monkeypatch.setattr(
+            score_mod, name,
+            lambda *a, _n=name, _r=real, **k: ran.append(_n) or _r(*a, **k),
+        )
+    for threshold, globals_fn, side in (
+        (m - 1, "precompute_globals", "distributed"),
+        (m, "precompute_globals", "local"),
+        (rows - 1, "precompute_globals", "local"),
+        (rows, "local_globals", "local"),
+    ):
+        monkeypatch.setattr(score_mod, "LOCAL_SCORE_THRESHOLD", threshold)
+        ran.clear()
+        pc, got = score_mod.resolve_globals(edges, True, True, "auto")
+        score_mod.release_globals(pc)
+        assert (ran, got) == ([globals_fn], side), threshold
+        assert pc["m"] == m

@@ -328,3 +328,456 @@ def test_extractor_directed_above_8_rejected(spark):
 
     with _pytest.raises(ValueError, match="directed"):
         MotifExtractor(edges, samples=10, max_size=9, directed=True)
+
+
+# --- driver-local regime: bit-identical to the distributed one -------------
+
+
+def test_numpy_xxhash64_matches_spark(spark):
+    """The sampler's numpy XXH64 equals ``F.xxhash64`` on long and int
+    columns, on int literals either side of the int32 boundary and on
+    the sampler's "k" / "seed_v" / per-round chains."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from motive_spark.motifs.sample import xxhash64
+
+    rng = np.random.default_rng(11)
+    info = np.iinfo(np.int64)
+    edge_vals = np.array(random_pairs(500, 200, seed=3), dtype=np.int64).ravel()
+    v = np.concatenate([
+        edge_vals,
+        rng.integers(info.min, info.max, 300, dtype=np.int64),
+        np.array([0, 1, -1, 2**31 - 1, 2**31, -(2**31), -(2**31) - 1,
+                  info.max, info.min], dtype=np.int64),
+    ])
+    i = (v % 100_003).astype(np.int32) - 50_000
+    df = spark.createDataFrame(pd.DataFrame({"v": v, "i": i}), "v long, i int")
+    lits = [0, 7, -7, 2**31 - 1, 2**31, -(2**31), -(2**31) - 1, 2**40]
+    chains = [
+        lambda lit: ("v",),
+        lambda lit: ("v", lit, "k"),
+        lambda lit: ("v", lit, "seed_v"),
+        lambda lit: ("v", 3, "v", lit),
+        lambda lit: ("v", 3, "i", lit),
+    ]
+    cols = {"v": v, "i": i}
+    exprs, want = [], []
+    for a, lit in enumerate(lits):
+        for b, chain in enumerate(chains):
+            args = chain(lit)
+            exprs.append(F.xxhash64(*[
+                F.col(x) if x in cols else F.lit(x) for x in args
+            ]).alias(f"h{a}_{b}"))
+            want.append((f"h{a}_{b}", xxhash64(*[cols.get(x, x) for x in args])))
+    got = df.select(*exprs).toPandas()
+    for name, mine in want:
+        assert np.array_equal(got[name].to_numpy(), mine), name
+
+
+_POCKET = random_pairs(30, 60, seed=2, directed=False) + [
+    (1, 2), (1, 2), (5, 5), (7, 7), (100, 101), (101, 100), (200, 200),
+]
+
+_EQUIV_CASES = {
+    "undirected_3_4": (
+        lambda: random_pairs(60, 240, seed=5, directed=False), "long",
+        dict(samples=800, min_size=3, max_size=4, seed=42, directed=False),
+    ),
+    "directed_ffl": (
+        lambda: sorted(
+            set(random_pairs(100, 200, seed=23))
+            | {(100 + 3 * i + a, 100 + 3 * i + b)
+               for i in range(15) for a, b in ((0, 1), (1, 2), (0, 2))}
+            | {(i, 100 + 3 * i) for i in range(15)}
+        ), "long",
+        dict(samples=1500, min_size=3, max_size=3, seed=3, directed=True),
+    ),
+    "undirected_8_10_int_ids": (
+        lambda: random_pairs(80, 400, seed=9, directed=False), "int",
+        dict(samples=400, min_size=8, max_size=10, min_freq=1, seed=7,
+             directed=False),
+    ),
+    "dups_loops_pocket": (
+        lambda: _POCKET, "long",
+        dict(samples=600, min_size=3, max_size=5, min_freq=1, seed=11,
+             directed=False),
+    ),
+}
+
+
+def _rows(df, cols):
+    return sorted(
+        tuple(tuple(x) if isinstance(x, list) else x for x in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_EQUIV_CASES))
+def test_local_extractor_matches_distributed(spark, case):
+    """``strategy="local"`` equals ``"distributed"`` row for row on the
+    motif table and the selected occurrences, and the local sampler draws
+    exactly the distributed sampler's samples (stuck samples included:
+    the pocket fixture's two-vertex component cannot grow to 3)."""
+    from motive_spark.motifs import MotifExtractor
+    from motive_spark.motifs.sample import (
+        sample_connected_subgraphs,
+        sample_local,
+        symmetric_csr,
+    )
+
+    make, id_type, kw = _EQUIV_CASES[case]
+    pairs = make()
+    edges = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+    local = MotifExtractor(edges, strategy="local", **kw)
+    dist = MotifExtractor(edges, strategy="distributed", **kw)
+    assert (local.strategy, dist.strategy) == ("local", "distributed")
+    try:
+        for a, b in ((local._motifs, dist._motifs),
+                     (local._occurrences, dist._occurrences)):
+            assert a.schema.simpleString() == b.schema.simpleString()
+            assert _rows(a, a.columns) == _rows(b, b.columns)
+        assert local._occurrences.count() > 0
+    finally:
+        dist.close()
+
+    sample_kw = {k: kw[k] for k in ("min_size", "max_size", "seed", "directed")}
+    sampled = sample_connected_subgraphs(edges, kw["samples"], **sample_kw)
+    want = _rows(sampled, ["occ_id", "vertices", "k"])
+    from motive_spark.checkpoint import CheckpointManager
+
+    CheckpointManager._release(sampled)
+    src = np.array([a for a, _ in pairs], dtype=np.int64)
+    dst = np.array([b for _, b in pairs], dtype=np.int64)
+    ids, indptr, nbr = symmetric_csr(src, dst)
+    occ, k, members = sample_local(
+        ids, indptr, nbr, kw["samples"], kw["min_size"], kw["max_size"],
+        kw["seed"], int_ids=id_type == "int",
+    )
+    got = sorted(
+        (int(o), tuple(sorted(ids[members[r, :kk]].tolist())), int(kk))
+        for r, (o, kk) in enumerate(zip(occ, k))
+    )
+    assert got == want
+    if case == "dups_loops_pocket":
+        assert len(got) < kw["samples"]
+
+
+def test_extractor_auto_switch_both_sides(spark, monkeypatch):
+    """``auto`` extracts locally at ``LOCAL_SCORE_THRESHOLD`` = m edge
+    rows and distributed at m - 1, with the forced result on each side."""
+    from motive_spark.mdl import score
+    from motive_spark.motifs import MotifExtractor, extract
+
+    pairs = random_pairs(40, 150, seed=9, directed=False)
+    m = len(pairs)
+    edges = edges_df(spark, pairs)
+    kw = dict(samples=300, min_size=3, max_size=4, directed=False)
+    forced = MotifExtractor(edges, strategy="local", **kw)
+    want = _rows(forced._occurrences, forced._occurrences.columns)
+
+    calls = []
+    real = extract._extract_local
+    monkeypatch.setattr(
+        extract, "_extract_local",
+        lambda *a, **k: calls.append(1) or real(*a, **k),
+    )
+    for threshold, side in ((m - 1, "distributed"), (m, "local")):
+        calls.clear()
+        monkeypatch.setattr(score, "LOCAL_SCORE_THRESHOLD", threshold)
+        ex = MotifExtractor(edges, **kw)
+        assert ex.strategy == side and len(calls) == (side == "local")
+        assert _rows(ex._occurrences, ex._occurrences.columns) == want
+        ex.close()
+
+
+def test_local_extractor_job_ceiling_and_no_python_eval(spark):
+    """The local regime is one bounded edge read plus the caller's own
+    action: a job ceiling on extraction + ``occurrences().count()``, and
+    no Python evaluation node in the returned frames' executed plans."""
+    from motive_spark.motifs import MotifExtractor
+
+    sc = spark.sparkContext
+    edges = edges_df(spark, random_pairs(60, 240, seed=5, directed=False))
+    group = "local_extractor_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        ex = MotifExtractor(edges, samples=800, min_size=3, max_size=5,
+                            directed=False)
+        ex.occurrences().count()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert ex.strategy == "local"
+    # 2 at local[2], local[4] and local[8]; the distributed regime took
+    # 58 at local[4]
+    assert jobs <= 2, jobs
+    for df in (ex.motifs(), ex.occurrences(), ex.top_motifs(3)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+            assert node not in plan, plan
+
+
+def test_local_probe_one_job_without_arrow(spark, tmp_path, monkeypatch):
+    """The local regime's edge read is one Spark job whatever the
+    partition count, keeps ``toPandas``' dtypes and null handling, and a
+    local ``fast_experiment`` builds no frame in the JVM (no Arrow after
+    the probe, so its first use in a session is never paid)."""
+    from pyspark.sql import functions as F
+
+    from motive_spark.experiment import fast_experiment
+    from motive_spark.mdl.score import local_edges
+
+    sc = spark.sparkContext
+    want = sorted((i % 60, (i * 7 + 1) % 60) for i in range(240))
+    for parts in (1, 3, 9):
+        # no shuffle and no cache below the probe, so every job is its
+        # own; the explode hides the row count, which would let the
+        # optimizer drop the limit
+        ids = spark.range(0, 240, 1, parts).select(F.explode(F.array("id")).alias("id"))
+        edges = ids.select(
+            (F.col("id") % 60).alias("src"), ((F.col("id") * 7 + 1) % 60).alias("dst")
+        )
+        group = f"local_probe_jobs_{parts}"
+        sc.setJobGroup(group, group)
+        try:
+            pdf = local_edges(edges, "auto")
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert jobs == 1, (parts, jobs)
+        assert sorted(zip(pdf["src"], pdf["dst"])) == want
+
+    pairs = random_pairs(60, 240, seed=5, directed=False)
+    ints = spark.createDataFrame(pairs, "src int, dst int")
+    for strategy in ("auto", "local"):
+        got = local_edges(ints, strategy)
+        assert [str(t) for t in got.dtypes] == ["int32", "int32"]
+        assert got.equals(ints.toPandas())
+    empty = local_edges(spark.createDataFrame([], "src long, dst long"), "auto")
+    assert len(empty) == 0 and [str(t) for t in empty.dtypes] == ["int64", "int64"]
+    nulls = spark.createDataFrame([(1, 2), (2, None)], "src long, dst long")
+    assert local_edges(nulls, "auto") is None
+    with pytest.raises(ValueError):
+        local_edges(nulls, "local")
+
+    base = edges_df(spark, pairs)
+    calls = []
+
+    def spy(name, fn):
+        def wrapped(*a, **kw):
+            calls.append(name)
+            return fn(*a, **kw)
+        return wrapped
+
+    # the runtime classes: the classic session and frame override the
+    # methods of pyspark.sql's base classes
+    for cls, name in ((type(spark), "createDataFrame"), (type(base), "toPandas")):
+        monkeypatch.setattr(cls, name, spy(name, getattr(cls, name)))
+    meta = fast_experiment(
+        base, str(tmp_path / "out"), samples=800, min_size=3, max_size=4,
+        directed=False, search_depth=2,
+    )
+    assert meta["n_motifs_scored"] >= 2
+    assert calls == [], calls
+    # the spies see the calls they stand for
+    spark.createDataFrame([(1, 2)], "src long, dst long").toPandas()
+    assert calls == ["createDataFrame", "toPandas"], calls
+
+
+def test_distributed_dedup_independent_of_partitioning(spark):
+    """Duplicate samples (same vertex set) keep the smallest occ_id, so
+    the greedy sweep — and the selected occurrences — do not depend on
+    how many shuffle partitions the plan ran with."""
+    from motive_spark.motifs import MotifExtractor
+
+    edges = edges_df(spark, random_pairs(30, 90, seed=4, directed=False))
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = []
+    try:
+        for parts in ("2", "7"):
+            spark.conf.set(key, parts)
+            ex = MotifExtractor(edges, samples=1500, min_size=3, max_size=4,
+                                directed=False, strategy="distributed")
+            got.append(_rows(ex._occurrences, ex._occurrences.columns))
+            ex.close()
+    finally:
+        spark.conf.set(key, old)
+    assert got[0] == got[1]
+
+
+def test_fast_experiment_leaves_no_cached_blocks(spark, tmp_path, monkeypatch):
+    """``fast_experiment`` adds nothing to the session's persisted-RDD
+    set, in the local and in the distributed regime, and hands its
+    ``strategy`` to the extractor.  The distributed sampler on its own
+    leaves only the checkpoint its result reads."""
+    from motive_spark.checkpoint import CheckpointManager
+    from motive_spark.experiment import fast_experiment
+    from motive_spark.motifs import extract
+    from motive_spark.motifs.sample import sample_connected_subgraphs
+
+    jsc = spark.sparkContext._jsc
+    edges = edges_df(spark, FIXTURE_TRI_HUB)
+
+    def added(before):
+        # the JVM's cleaner may drop blocks other tests left behind
+        # meanwhile, so only what a call adds is checked
+        return set(jsc.getPersistentRDDs().keySet().toArray()) - before
+
+    before = added(set())
+    sampled = sample_connected_subgraphs(edges, 200, 3, 5, directed=False)
+    assert len(added(before)) == 1
+    CheckpointManager._release(sampled)
+    assert added(before) == set()
+
+    calls = []
+    real = extract._extract_local
+    monkeypatch.setattr(
+        extract, "_extract_local",
+        lambda *a, **k: calls.append(1) or real(*a, **k),
+    )
+    for strategy in ("local", "distributed"):
+        calls.clear()
+        before = added(set())
+        meta = fast_experiment(
+            edges, str(tmp_path / strategy), samples=400, min_size=3,
+            max_size=3, directed=False, search_depth=0, strategy=strategy,
+        )
+        assert meta["n_motifs_scored"] >= 1
+        assert added(before) == set(), strategy
+        assert len(calls) == (strategy == "local")
+
+
+def test_extractor_string_ids_run_distributed(spark):
+    """Non-integral ids extract on the distributed path — under ``auto``
+    too — and come back with their own element type; ``local`` refuses
+    them."""
+    from pyspark.sql.types import StringType
+
+    from motive_spark.motifs import MotifExtractor
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    kw = dict(samples=60, min_size=3, max_size=3, min_freq=1, directed=False)
+    for strategy in ("distributed", "auto"):
+        ex = MotifExtractor(edges, strategy=strategy, **kw)
+        try:
+            assert ex.strategy == "distributed"
+            occ = ex.occurrences()
+            assert occ.schema["vertices"].dataType.elementType == StringType()
+            rows = occ.collect()
+            assert rows and all(set(r["vertices"]) <= set("abcd") for r in rows)
+        finally:
+            ex.close()
+    with pytest.raises(ValueError, match="integral"):
+        MotifExtractor(edges, strategy="local", **kw)
+
+
+def _sinks(out_dir):
+    """A fast_experiment output directory as comparable values: file
+    bytes, occurrence files as sorted lines, metadata without timings."""
+    import json
+    import os
+
+    got = {}
+    for name in sorted(os.listdir(out_dir)):
+        path = os.path.join(out_dir, name)
+        if name == "metadata.json":
+            with open(path) as f:
+                meta = json.load(f)
+            for key in ("sample_time_sec", "elapsed_sec"):
+                meta.pop(key)
+            got[name] = meta
+        elif name.startswith("occurrences."):
+            with open(path, "rb") as f:
+                got[name] = sorted(f.read().splitlines(keepends=True))
+        else:
+            with open(path, "rb") as f:
+                got[name] = f.read()
+    return got
+
+
+def test_fast_experiment_sinks_identical_across_regimes_and_partitions(spark, tmp_path):
+    """``fast_experiment`` writes the same bytes in the local regime and
+    in the distributed regime at two shuffle partition counts: float sums
+    over degree histograms run in degree order, not in the order a
+    collect returned them, and each motif's edge list comes from its
+    first occurrence in selection order."""
+    from motive_spark.experiment import fast_experiment
+
+    # a spread of degrees (a hub, a dense core, a sparse rim) so the
+    # histogram sums are long enough for their order to show
+    pairs = set(random_pairs(70, 260, seed=8, directed=False))
+    pairs |= {(0, v) for v in range(1, 45)} | {(1, v) for v in range(2, 20, 2)}
+    edges = edges_df(spark, sorted(pairs))
+    kw = dict(samples=500, min_size=3, max_size=4, min_freq=2, max_motifs=4,
+              directed=False, search_depth=1, seed=5)
+    # AQE would coalesce both partition counts down to the same few
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    old = {key: spark.conf.get(key) for key in keys}
+    runs = {}
+    try:
+        for label, strategy, parts in (
+            ("local", "local", old[keys[0]]),
+            ("distributed_2", "distributed", "2"),
+            ("distributed_7", "distributed", "7"),
+        ):
+            spark.conf.set(keys[0], parts)
+            spark.conf.set(keys[1], str(strategy == "local").lower())
+            fast_experiment(edges, str(tmp_path / label), strategy=strategy, **kw)
+            runs[label] = _sinks(tmp_path / label)
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+    assert sum(n.startswith("occurrences.") for n in runs["local"]) >= 2
+    for label in ("distributed_2", "distributed_7"):
+        for name, want in runs["local"].items():
+            assert runs[label].get(name) == want, (label, name)
+        assert set(runs[label]) == set(runs["local"])
+
+
+def test_local_fast_experiment_job_ceiling_and_no_python_eval(spark, tmp_path):
+    """The local regime reads the edges once and runs everything else on
+    the driver: a job ceiling on the whole ``fast_experiment`` call, and
+    no Python evaluation node in the plans of the frames the local
+    extractor, search and scorer return."""
+    from motive_spark.experiment import fast_experiment
+    from motive_spark.mdl.score import score_motifs
+    from motive_spark.mdl.search import size_with_search
+    from motive_spark.motifs import MotifExtractor
+
+    sc = spark.sparkContext
+    edges = edges_df(spark, random_pairs(60, 240, seed=5, directed=False))
+    group = "local_fast_experiment_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        meta = fast_experiment(
+            edges, str(tmp_path / "out"), samples=800, min_size=3, max_size=4,
+            directed=False, search_depth=2,
+        )
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert meta["n_motifs_scored"] >= 2
+    # the bounded edge read: 1-2 jobs at local[2], local[4] and local[8];
+    # the parent took 60-90
+    assert jobs <= 2, jobs
+
+    ex = MotifExtractor(edges, samples=800, min_size=3, max_size=4, directed=False)
+    assert ex.strategy == "local"
+    frames = [
+        ex.motifs(), ex.occurrences(), ex.top_motifs(3),
+        size_with_search(edges, ex.occurrences(), directed=False,
+                         model=("er", "el"), max_depth=1),
+        score_motifs(edges, ex.occurrences(), directed=False),
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
+            assert node not in plan, plan
