@@ -93,7 +93,7 @@ class CheckpointManager:
                 self._release(state)
             state, owned = new, self.base_dir is None
             rec = self.counters[-1]
-            rec["superstep_sec"] = round(time.time() - t0, 3)
+            rec["superstep_sec"] = round(time.time() - t0, 6)
             if delta is not None:
                 rec["delta"] = delta
             if self.base_dir is not None:

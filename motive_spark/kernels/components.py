@@ -14,24 +14,31 @@ Scale notes:
     Components in MapReduce and Beyond", SoCC'14 — public literature);
   * the symmetrized edge table is partitioned once on the gather key and
     cached; labels (1 row/vertex) are the only per-round shuffle;
-  * two plans, the pagerank.py switch (``strategy="auto"``; any other
-    value than ``auto``/``broadcast``/``csr`` raises ValueError): the
-    label side is BROADCAST only below BROADCAST_MAX_VERTICES — above
-    that, a per-superstep |V|-row broadcast would serialize on the
+  * three regimes, the pagerank.py switch (``strategy="auto"``; any
+    other value than ``auto``/``local``/``broadcast``/``csr`` raises
+    ValueError): up to ``graph.local.LOCAL_SCORE_THRESHOLD`` raw edge
+    rows (integral ids, no checkpoint/resume/pre-partitioned layout)
+    the ``local`` regime reads the edges once and runs every superstep
+    in numpy on the driver — the same neighbor-min and pointer jump,
+    ``fixed_iters`` partial states included.  Above it the label side
+    is BROADCAST only below BROADCAST_MAX_VERTICES — above that, a
+    per-superstep |V|-row broadcast would serialize on the
     hash-relation build and OOM executors at billion-vertex scale, so
     the ``csr`` plan gathers labels over salted CSR blocks of the
     symmetric adjacency with one exchange per superstep;
-  * the loop is ``CheckpointManager.run``: per-superstep Parquet
-    checkpoint (or localCheckpoint) → resume + lineage truncation, with
-    the changed-label count as its convergence probe.
+  * the distributed loop is ``CheckpointManager.run``: per-superstep
+    Parquet checkpoint (or localCheckpoint) → resume + lineage
+    truncation, with the changed-label count as its convergence probe.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from motive_spark.checkpoint import CheckpointManager
+from motive_spark.graph import local
 from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES, check_strategy
 
 
@@ -44,11 +51,15 @@ def connected_components(
     big_star: bool = True,
     strategy: str = "auto",
     pre_partitioned: bool = False,
+    counters_out: list | None = None,
 ) -> DataFrame:
     """Returns (id, component) — component = min vertex id reachable.
 
-    ``edges`` is treated as undirected.  ``fixed_iters`` runs exactly
+    ``edges`` is treated as undirected; self-loops are dropped, so a
+    vertex with only a self-loop is absent.  ``fixed_iters`` runs exactly
     that many supersteps without a convergence check (oracle mode).
+    ``counters_out`` (a list) receives one record per superstep, with
+    the changed-label count as ``delta`` and the regime as ``strategy``.
 
     ``pre_partitioned=True`` declares ``edges`` is ALREADY symmetrized,
     self-loop-free, deduped, and hash-distributed on ``dst`` (e.g. a
@@ -59,6 +70,17 @@ def connected_components(
     """
     check_strategy(strategy, "connected_components")
     spark = edges.sparkSession
+    pdf = local.kernel_edges(
+        edges, strategy, "connected_components",
+        durable=checkpoint_dir is not None or resume or pre_partitioned,
+    )
+    if pdf is not None:
+        ids, comp, counters = _local_components(
+            pdf["src"].to_numpy(), pdf["dst"].to_numpy(), max_iter, fixed_iters, big_star
+        )
+        if counters_out is not None:
+            counters_out.extend(counters)
+        return local.id_frame(edges, {"id": ids, "component": comp})
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # partitioned on dst once: the per-superstep gather joins on sym.dst,
@@ -194,4 +216,47 @@ def connected_components(
     sym.unpersist()
     if csr is not None:
         csr.unpersist()
+    if counters_out is not None:
+        counters_out.extend(dict(c, strategy=strategy) for c in ckpt.counters)
     return labels.select("id", "component")
+
+
+def local_sym(src: np.ndarray, dst: np.ndarray) -> tuple:
+    """The symmetrized, deduped, self-loop-free graph of the distributed
+    plans' ``sym`` table, on the driver: (ids, s, d) with ``ids`` the
+    sorted vertex ids and (s, d) index pairs sorted by (s, d).  Every
+    vertex has at least one neighbor."""
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    a, b = inv[: len(src)].astype(np.int64), inv[len(src):].astype(np.int64)
+    pairs = np.unique(np.concatenate([a * n + b, b * n + a]))
+    return ids, pairs // n, pairs % n
+
+
+def _local_components(src, dst, max_iter, fixed_iters, big_star):
+    """The local regime of :func:`connected_components`: (ids,
+    components, counters).  Labels are indices into the sorted ids, so
+    the minimum index is the minimum id."""
+    ids, s, d = local_sym(src, dst)
+    if not len(ids):
+        return ids, ids, []
+    starts = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
+
+    def step(lab):
+        # neighbor-min over {self} ∪ N(v), then the pointer jump
+        new = np.minimum(lab, np.minimum.reduceat(lab[d], starts))
+        if big_star:
+            new = np.minimum(new, new[new])
+        return new
+
+    def changed(new, old):
+        return int(np.count_nonzero(new != old))
+
+    lab, counters = local.run_local(
+        np.arange(len(ids)), step,
+        fixed_iters if fixed_iters is not None else max_iter,
+        probe=changed if fixed_iters is None else None, tol=1,
+    )
+    return ids, ids[lab], counters

@@ -12,19 +12,26 @@ are the only per-round shuffle.  The loop is ``CheckpointManager.run``
 (Parquet checkpoint or localCheckpoint per superstep, resume).
 
 ``label_propagation`` has the pagerank.py switch (``strategy="auto"``;
-any other value than ``auto``/``broadcast``/``csr`` raises ValueError):
-the label side is BROADCAST only below BROADCAST_MAX_VERTICES — above
-that the ``csr`` plan gathers labels over salted CSR blocks, so no
-per-superstep giant hash-relation build.  ``seeded_label_propagation``
-keeps a shuffle-hash ``copartition`` plan above the threshold.
+any other value than ``auto``/``local``/``broadcast``/``csr`` raises
+ValueError): up to ``graph.local.LOCAL_SCORE_THRESHOLD`` raw edge rows
+(integral ids, no checkpoint/resume/pre-partitioned layout) the
+``local`` regime reads the edges once and runs the rounds in numpy on
+the driver; above it the label side is BROADCAST only below
+BROADCAST_MAX_VERTICES — above that the ``csr`` plan gathers labels over
+salted CSR blocks, so no per-superstep giant hash-relation build.
+``seeded_label_propagation`` keeps a shuffle-hash ``copartition`` plan
+above the threshold.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from motive_spark.checkpoint import CheckpointManager
+from motive_spark.graph import local
+from motive_spark.kernels.components import local_sym
 from motive_spark.kernels.pagerank import BROADCAST_MAX_VERTICES, check_strategy
 
 
@@ -35,10 +42,14 @@ def label_propagation(
     resume: bool = False,
     strategy: str = "auto",
     pre_partitioned: bool = False,
+    counters_out: list | None = None,
 ) -> DataFrame:
     """Returns (id, label) after exactly ``iters`` synchronous rounds.
 
-    ``edges`` is treated as undirected.  ``pre_partitioned=True``
+    ``edges`` is treated as undirected; self-loops are dropped, so a
+    vertex with only a self-loop is absent.  ``counters_out`` (a list)
+    receives one record per round, naming the regime as ``strategy``.
+    ``pre_partitioned=True``
     declares ``edges`` is ALREADY symmetrized, self-loop-free, deduped,
     and hash-distributed on ``dst`` (a bucketed table) — the symmetrize
     + repartition pass is skipped and the stationary edge side of each
@@ -47,6 +58,17 @@ def label_propagation(
     """
     check_strategy(strategy, "label_propagation")
     spark = edges.sparkSession
+    pdf = local.kernel_edges(
+        edges, strategy, "label_propagation",
+        durable=checkpoint_dir is not None or resume or pre_partitioned,
+    )
+    if pdf is not None:
+        ids, label, counters = _local_label_propagation(
+            pdf["src"].to_numpy(), pdf["dst"].to_numpy(), iters
+        )
+        if counters_out is not None:
+            counters_out.extend(counters)
+        return local.id_frame(edges, {"id": ids, "label": label})
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # partitioned on dst once (the gather key); the auto-switch vertex
@@ -113,13 +135,41 @@ def label_propagation(
             .repartition(npart, "id")
         )
 
-    labels = CheckpointManager(spark, checkpoint_dir).run(
+    ckpt = CheckpointManager(spark, checkpoint_dir)
+    labels = ckpt.run(
         verts.select("id", F.col("id").alias("label")), step, iters, resume=resume
     )
     sym.unpersist()
     if csr is not None:
         csr.unpersist()
+    if counters_out is not None:
+        counters_out.extend(dict(c, strategy=strategy) for c in ckpt.counters)
     return labels.select("id", "label")
+
+
+def _local_label_propagation(src, dst, iters):
+    """The local regime of :func:`label_propagation`: (ids, labels,
+    counters).  Labels are indices into the sorted ids, so the smallest
+    index is the smallest label."""
+    ids, s, d = local_sym(src, dst)
+    n = len(ids)
+    if not n:
+        return ids, ids, []
+
+    def step(lab):
+        # votes per (vertex, label); the winner per vertex is the first
+        # row in (vertex, count desc, label asc) order
+        keys, cnt = np.unique(s * n + lab[d], return_counts=True)
+        v, lv = keys // n, keys % n
+        order = np.lexsort((lv, -cnt, v))
+        v, lv = v[order], lv[order]
+        first = np.r_[True, v[1:] != v[:-1]]
+        new = lab.copy()
+        new[v[first]] = lv[first]
+        return new
+
+    lab, counters = local.run_local(np.arange(n), step, iters)
+    return ids, ids[lab], counters
 
 
 def seeded_label_propagation(

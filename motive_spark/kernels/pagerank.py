@@ -9,10 +9,18 @@ where dangling = sum of r(u) over vertices with outdeg 0.  This matches
 networkx.pagerank's per-iteration update, so per-vertex scores converge
 allclose(1e-6) against the reference power iteration (BASELINE.json).
 
-Two physical strategies, chosen by |V| (``strategy="auto"``; any other
-value than ``auto``/``broadcast``/``csr`` raises ValueError).  The same
+Three regimes, chosen by ``strategy="auto"`` (any other value than
+``auto``/``local``/``broadcast``/``csr`` raises ValueError).  The same
 switch serves connected_components and label_propagation:
 
+* ``local`` (at most ``graph.local.LOCAL_SCORE_THRESHOLD`` raw edge rows
+  with non-null integral ids): the edges are read once through the
+  bounded probe of ``graph.local.local_edges`` and every superstep runs
+  in numpy on the driver; the result comes back as a local relation
+  with the distributed plans' schema.  One Spark job per call instead
+  of 8–10 per superstep.  ``auto`` takes it only when the call keeps no
+  durable state (no ``checkpoint_dir``, ``resume``, ``pre_partitioned``
+  or ``plans_out``) — those stay with the plans below.
 * ``broadcast`` (|V| <= BROADCAST_MAX_VERTICES): ranks broadcast against
   the stationary edge table — zero edge movement, one hash-relation
   build per superstep.  The explicit hint matters: without it Spark
@@ -32,21 +40,26 @@ switch serves connected_components and label_propagation:
   shuffle-hash plan over a stationary edge table and 1.8x faster than
   a 2-D block-aligned gather (BENCH/BASELINE.md).
 
+An explicit ``broadcast``/``csr`` never probes the edges.
 The weighted and personalized variants keep the shuffle-hash
 ``copartition`` plan above the threshold.
 
-Every loop here runs on ``CheckpointManager.run``: per-superstep lineage
-truncation (Parquet when a checkpoint dir is given — resumable
-mid-iteration per north_rule — else localCheckpoint), release of
-superseded state, and the shared L1 convergence probe ``l1_delta``.
+Every distributed loop here runs on ``CheckpointManager.run``:
+per-superstep lineage truncation (Parquet when a checkpoint dir is given
+— resumable mid-iteration per north_rule — else localCheckpoint),
+release of superseded state, and the shared L1 convergence probe
+``l1_delta``; the local regime runs ``graph.local.run_local``, which
+keeps the same per-superstep counters.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from motive_spark.checkpoint import CheckpointManager
+from motive_spark.graph import local
 
 # above this vertex count, broadcasting the rank table each superstep is
 # slower than shuffling it (hash-relation build is single-threaded)
@@ -55,11 +68,11 @@ BROADCAST_MAX_VERTICES = 2_000_000
 
 def check_strategy(strategy: str, kernel: str) -> None:
     """pagerank, connected_components and label_propagation have exactly
-    the two plans ``auto`` chooses between."""
-    if strategy not in ("auto", "broadcast", "csr"):
+    the three regimes ``auto`` chooses between."""
+    if strategy not in ("auto", "local", "broadcast", "csr"):
         raise ValueError(
-            f"{kernel}: strategy must be 'auto', 'broadcast' or 'csr', "
-            f"got {strategy!r}"
+            f"{kernel}: strategy must be 'auto', 'local', 'broadcast' or "
+            f"'csr', got {strategy!r}"
         )
 
 
@@ -111,6 +124,23 @@ def pagerank(
     """
     check_strategy(strategy, "pagerank")
     spark = edges.sparkSession
+    pdf = local.kernel_edges(
+        edges, strategy, "pagerank",
+        durable=checkpoint_dir is not None or resume or pre_partitioned
+        or plans_out is not None,
+    )
+    if pdf is not None:
+        init = None
+        if init_ranks is not None:
+            init = dict(init_ranks.select("id", "rank").rdd.collect())
+        ids, rank, counters = _local_pagerank(
+            pdf["src"].to_numpy(), pdf["dst"].to_numpy(), damping, max_iter, tol, init
+        )
+        if counters_out is not None:
+            counters_out.extend(counters)
+        if not len(ids):  # the distributed plan's empty result
+            return spark.createDataFrame([], "id long, rank double")
+        return local.id_frame(edges, {"id": ids, "rank": rank}, "double")
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     e = edges.select("src", "dst")
@@ -244,8 +274,45 @@ def pagerank(
         if cached is not None:
             cached.unpersist()
     if counters_out is not None:
-        counters_out.extend(ckpt.counters)
+        counters_out.extend(dict(c, strategy=strategy) for c in ckpt.counters)
     return ranks.select("id", "rank")
+
+
+def _local_pagerank(src, dst, damping, max_iter, tol, init=None):
+    """The local regime of :func:`pagerank`: (ids, ranks, counters) by
+    the same update, in numpy.  ``out_deg`` counts every edge row,
+    duplicates and self-loops included; ``init`` maps id -> warm-start
+    rank."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(ids)
+    if n == 0:
+        return ids, np.zeros(0), []
+    s, d = inv[: len(src)], inv[len(src):]
+    out_deg = np.bincount(s, minlength=n)
+    dangling = out_deg == 0
+    src_deg = out_deg[s].astype(np.float64)
+    rank = np.full(n, 1.0 / n)
+    if init is not None:
+        rank = np.array(
+            [1.0 / n if (r := init.get(v)) is None else r for v in ids.tolist()]
+        )
+        rank = rank / (rank.sum() or 1.0)
+
+    def step(r):
+        new = (1.0 - damping) / n + damping * np.bincount(
+            d, weights=r[s] / src_deg, minlength=n
+        )
+        if dangling.any():
+            new = new + damping * r[dangling].sum() / n
+        return new
+
+    def l1(new, old):
+        return float(np.abs(new - old).sum())
+
+    rank, counters = local.run_local(
+        rank, step, max_iter, probe=l1 if tol is not None else None, tol=tol
+    )
+    return ids, rank, counters
 
 
 def weighted_pagerank(

@@ -41,6 +41,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from motive_spark.graph import local as _local
+# re-exported: the local regime's switch and probe live in graph.local,
+# shared with the iterative kernels
+from motive_spark.graph.local import LOCAL_SCORE_THRESHOLD, local_edges  # noqa: F401
 from motive_spark.mdl import codes
 from motive_spark.mdl.models import (
     el_bits_directed,
@@ -151,71 +155,6 @@ def precompute_globals(
     }
 
 
-# graphs at or below this simple-edge count score driver-locally by
-# default: a Fibonacci-search round then costs numpy arithmetic instead
-# of a full distributed pass (3 cache materializations + ~8 jobs), which
-# is what made `--type fast` on a 40-vertex fixture cost minutes
-LOCAL_SCORE_THRESHOLD = 50_000
-
-
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-# the numpy dtype of each integral Spark type, as toPandas would give it
-_NP_INT = {T.ByteType: np.int8, T.ShortType: np.int16, T.IntegerType: np.int32,
-           T.LongType: np.int64}
-
-
-def _integral_ids(edges: DataFrame) -> bool:
-    return all(isinstance(edges.schema[c].dataType, _INTEGRAL) for c in ("src", "dst"))
-
-
-def local_edges(edges: DataFrame, strategy: str) -> pd.DataFrame | None:
-    """The edge table as pandas ``(src, dst[, mult])`` when the
-    driver-local regime applies, else None.
-
-    The local regime needs non-null integral ids (and ``mult``).
-    ``auto`` reads at most ``LOCAL_SCORE_THRESHOLD + 1`` rows — one
-    bounded probe — and gives up above the threshold; ``local`` reads
-    the whole table and raises on ids it cannot use; ``distributed``
-    reads nothing.  Raw rows bound simple edges from above, so a table
-    that passes the probe also passes the scorer's simple-edge switch.
-
-    The probe collects rows, not ``toPandas``: Arrow's first use in a
-    JVM loads and compiles its classes, which costs more than decoding
-    the probe's rows and varies from run to run.  The columns keep the
-    dtypes ``toPandas`` gives (``int32`` for int ids).
-    """
-    if strategy not in ("auto", "local", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "distributed":
-        return None
-    ok = _integral_ids(edges)
-    pdf = None
-    if ok:
-        cols = [F.col("src"), F.col("dst")]
-        if "mult" in edges.columns:
-            cols.append(F.col("mult").cast("long"))
-        probe = edges.select(*cols)
-        if strategy == "auto":
-            probe = probe.limit(LOCAL_SCORE_THRESHOLD + 1)
-        # through the plan's RDD: one job whatever the partition count
-        # (``collect`` on a limit scans one partition, then 4x more, ...
-        # job by job); rows are pickled in the JVM, no Python worker runs
-        rows = probe.rdd.collect()
-        if strategy == "auto" and len(rows) > LOCAL_SCORE_THRESHOLD:
-            return None
-        fields = probe.schema.fields
-        values = list(zip(*rows)) if rows else [()] * len(fields)
-        ok = not any(None in v for v in values)
-        if ok:
-            pdf = pd.DataFrame({
-                f.name: np.fromiter(v, dtype=_NP_INT[type(f.dataType)], count=len(v))
-                for f, v in zip(fields, values)
-            })
-    if not ok and strategy == "local":
-        raise ValueError("the local regime needs non-null integral src/dst ids")
-    return pdf if ok else None
-
-
 def _local_graph(e_rows: list, deg_map: dict) -> tuple:
     """``pc["_local"]``: the simple edge rows in (src, dst) order, the
     per-vertex (in, out) degrees and each vertex's incident row indices."""
@@ -300,7 +239,7 @@ def resolve_globals(
         return local_globals(edges_pdf, directed, simplify), "local"
     pc = precompute_globals(edges, directed, simplify)
     if strategy == "auto":
-        small = pc["m"] <= LOCAL_SCORE_THRESHOLD and _integral_ids(edges)
+        small = pc["m"] <= _local.LOCAL_SCORE_THRESHOLD and _local.integral_ids(edges)
         strategy = "local" if small else "distributed"
     return pc, strategy
 
@@ -531,7 +470,7 @@ def score_motifs(
         pc = precomputed
         if strategy == "auto":
             strategy = (
-                "local" if pc["m"] <= LOCAL_SCORE_THRESHOLD else "distributed"
+                "local" if pc["m"] <= _local.LOCAL_SCORE_THRESHOLD else "distributed"
             )
     if strategy == "local":
         occ_rows = occurrences.select(

@@ -19,7 +19,7 @@ Spark-first re-expression of D/UPlainMotifExtractor
      UPlainMotifExtractor.java:165-227.
 
 Two regimes, split by one bounded probe of the edge table at
-``mdl.score.LOCAL_SCORE_THRESHOLD`` raw rows (``mdl.score.local_edges``,
+``graph.local.LOCAL_SCORE_THRESHOLD`` raw rows (``graph.local.local_edges``,
 the MDL scorer's switch; raw rows >= simple edges, so a local
 extraction is always followed by a local MDL search):
 
@@ -88,7 +88,7 @@ def _remove_overlaps(pdf: pd.DataFrame) -> pd.DataFrame:
 def _vertex_type(edges: DataFrame) -> str:
     """Element type of ``vertices``: long for integral ids (the local
     regime's type too), else the type of ``src`` (e.g. string ids)."""
-    from motive_spark.mdl.score import _INTEGRAL
+    from motive_spark.graph.local import _INTEGRAL
 
     t = edges.schema["src"].dataType
     return "long" if isinstance(t, _INTEGRAL) else t.simpleString()

@@ -23,7 +23,7 @@ Each sample starts at a seed vertex and grows by ``k-1`` rounds:
   the distributed ones and the regime switch cannot change results.
 
 ``MotifExtractor`` picks the regime: driver-local for unlabeled graphs
-of at most ``mdl.score.LOCAL_SCORE_THRESHOLD`` edge rows with non-null
+of at most ``graph.local.LOCAL_SCORE_THRESHOLD`` edge rows with non-null
 integral ids, distributed otherwise.
 
 Correctness contract (SURVEY §7.3-5): occurrences are connected induced

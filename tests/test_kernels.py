@@ -29,6 +29,10 @@ FIXTURE_TRI_HUB = [
 
 TWO_COMPONENTS = [(0, 1), (1, 2), (3, 4), (5, 6), (6, 3)]
 
+# every regime of pagerank / components / label propagation; the oracle
+# tests loop over them (small fixtures make ``auto`` resolve to local)
+STRATEGIES = ("local", "broadcast", "csr")
+
 
 def random_pairs(n, m, seed, directed=True):
     rng = random.Random(seed)
@@ -48,15 +52,18 @@ def test_pagerank_matches_power_iteration(spark, seed):
     pairs = random_pairs(40, 160, seed)
     from motive_spark.kernels import pagerank
 
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(edges_df(spark, pairs), max_iter=60, tol=1e-10).collect()
-    }
     want = py_pagerank(pairs, max_iter=200, tol=1e-12)
-    assert set(got) == set(want)
-    for v in want:
-        assert math.isclose(got[v], want[v], abs_tol=1e-6), (v, got[v], want[v])
-    assert math.isclose(sum(got.values()), 1.0, abs_tol=1e-6)
+    for strategy in STRATEGIES:
+        got = {
+            r["id"]: r["rank"]
+            for r in pagerank(
+                edges_df(spark, pairs), max_iter=60, tol=1e-10, strategy=strategy
+            ).collect()
+        }
+        assert set(got) == set(want), strategy
+        for v in want:
+            assert math.isclose(got[v], want[v], abs_tol=1e-6), (strategy, v, got[v], want[v])
+        assert math.isclose(sum(got.values()), 1.0, abs_tol=1e-6), strategy
 
 
 def test_pagerank_dangling_nodes(spark):
@@ -64,24 +71,30 @@ def test_pagerank_dangling_nodes(spark):
     pairs = [(0, 1), (1, 2), (3, 2)]
     from motive_spark.kernels import pagerank
 
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(edges_df(spark, pairs), max_iter=80, tol=1e-12).collect()
-    }
     want = py_pagerank(pairs, max_iter=500, tol=1e-14)
-    for v in want:
-        assert math.isclose(got[v], want[v], abs_tol=1e-6)
+    for strategy in STRATEGIES:
+        got = {
+            r["id"]: r["rank"]
+            for r in pagerank(
+                edges_df(spark, pairs), max_iter=80, tol=1e-12, strategy=strategy
+            ).collect()
+        }
+        for v in want:
+            assert math.isclose(got[v], want[v], abs_tol=1e-6), (strategy, v)
 
 
 @pytest.mark.parametrize("pairs", [TWO_COMPONENTS, FIXTURE_TRI_HUB])
 def test_components_exact(spark, pairs):
     from motive_spark.kernels import connected_components
 
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(edges_df(spark, pairs)).collect()
-    }
-    assert got == py_components(pairs)
+    for strategy in STRATEGIES:
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edges_df(spark, pairs), strategy=strategy
+            ).collect()
+        }
+        assert got == py_components(pairs), strategy
 
 
 def test_components_long_chain(spark):
@@ -90,11 +103,14 @@ def test_components_long_chain(spark):
     pairs = [(i, i + 1) for i in range(63)]
     from motive_spark.kernels import connected_components
 
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(edges_df(spark, pairs), max_iter=12).collect()
-    }
-    assert got == {i: 0 for i in range(64)}
+    for strategy in STRATEGIES:
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                edges_df(spark, pairs), max_iter=12, strategy=strategy
+            ).collect()
+        }
+        assert got == {i: 0 for i in range(64)}, strategy
 
 
 @pytest.mark.parametrize("pairs,expected_total", [(FIXTURE_TRI_HUB, 4)])
@@ -131,9 +147,9 @@ def test_triangles_random(spark, seed):
 
 
 def test_cc_lp_strategies_match(spark):
-    # both physical paths — broadcast (small |V|) and csr (the
-    # >BROADCAST_MAX_VERTICES plan: single-exchange superstep over
-    # salted CSR blocks) — produce identical labels
+    # every regime — local (numpy on the driver), broadcast (small |V|)
+    # and csr (the >BROADCAST_MAX_VERTICES plan: single-exchange
+    # superstep over salted CSR blocks) — produces identical labels
     from motive_spark.kernels import connected_components, label_propagation
 
     pairs = random_pairs(60, 150, seed=5, directed=False)
@@ -143,40 +159,49 @@ def test_cc_lp_strategies_match(spark):
             r["id"]: r["component"]
             for r in connected_components(e, strategy=s).collect()
         }
-        for s in ("broadcast", "csr")
+        for s in STRATEGIES
     }
-    assert cc["broadcast"] == cc["csr"] == py_components(pairs)
+    assert cc["local"] == cc["broadcast"] == cc["csr"] == py_components(pairs)
     lp = {
         s: {
             r["id"]: r["label"]
             for r in label_propagation(e, iters=3, strategy=s).collect()
         }
-        for s in ("broadcast", "csr")
+        for s in STRATEGIES
     }
-    assert lp["broadcast"] == lp["csr"]
+    assert lp["local"] == lp["broadcast"] == lp["csr"]
 
 
 def test_label_propagation_deterministic(spark):
     from motive_spark.kernels import label_propagation
 
-    pairs = FIXTURE_TRI_HUB
-    a = {r["id"]: r["label"] for r in label_propagation(edges_df(spark, pairs), iters=4).collect()}
-    b = {r["id"]: r["label"] for r in label_propagation(edges_df(spark, pairs), iters=4).collect()}
-    assert a == b
-    # triangle {0,1,2}: after round 1 every member holds the min label 0
-    clique = [(0, 1), (0, 2), (1, 2)]
-    one = {r["id"]: r["label"] for r in label_propagation(edges_df(spark, clique), iters=2).collect()}
-    assert one == {0: 0, 1: 0, 2: 0}
+    def labels(pairs, iters, strategy):
+        return {
+            r["id"]: r["label"]
+            for r in label_propagation(
+                edges_df(spark, pairs), iters=iters, strategy=strategy
+            ).collect()
+        }
+
+    for strategy in STRATEGIES:
+        a = labels(FIXTURE_TRI_HUB, 4, strategy)
+        assert a == labels(FIXTURE_TRI_HUB, 4, strategy), strategy
+        # triangle {0,1,2}: after round 1 every member holds the min label 0
+        clique = [(0, 1), (0, 2), (1, 2)]
+        assert labels(clique, 2, strategy) == {0: 0, 1: 0, 2: 0}, strategy
 
 
 def test_auto_strategy_selects_csr_above_threshold(spark, monkeypatch):
     """The size switch, pinned on both sides: at the real
     BROADCAST_MAX_VERTICES, auto takes the broadcast plan (no CSR
     build); with the threshold lowered below |V| it takes the csr plan
-    (one CSR build per kernel) and produces identical results."""
+    (one CSR build per kernel) and produces identical results.  The
+    local threshold is lowered below the edge rows so that ``auto``
+    reaches the vertex switch at all."""
     import importlib
 
     from motive_spark.graph import csr as csr_mod
+    from motive_spark.graph import local as local_mod
 
     builds = []
     real_build = csr_mod.build_csr
@@ -188,6 +213,7 @@ def test_auto_strategy_selects_csr_above_threshold(spark, monkeypatch):
     monkeypatch.setattr(csr_mod, "build_csr", spy)
     pairs = random_pairs(40, 100, seed=9, directed=False)
     e = edges_df(spark, pairs)
+    monkeypatch.setattr(local_mod, "LOCAL_SCORE_THRESHOLD", len(pairs) - 1)
     from motive_spark.kernels import (
         connected_components,
         label_propagation,
@@ -225,8 +251,8 @@ def test_auto_strategy_selects_csr_above_threshold(spark, monkeypatch):
     "strategy", ["copartition", "csr2d", "shuffle_hash", "BROADCAST"]
 )
 def test_unknown_strategy_raises(spark, strategy):
-    """pagerank, components and label propagation have exactly the two
-    plans auto chooses between; any other strategy is an error, raised
+    """pagerank, components and label propagation have exactly the three
+    regimes auto chooses between; any other strategy is an error, raised
     before any Spark work."""
     from motive_spark.kernels import (
         connected_components,
@@ -240,16 +266,206 @@ def test_unknown_strategy_raises(spark, strategy):
             fn(e, strategy=strategy)
 
 
+def _by_id(df, col):
+    return {r["id"]: r[col] for r in df.collect()}
+
+
+def test_local_regime_equals_distributed(spark):
+    """The local regime returns what the broadcast plan returns — the
+    same ids, the same schema (int ids stay int), PageRank within 1e-12
+    and labels exactly — on duplicate edges, self-loops, a dangling
+    vertex, a self-loop-only vertex, an empty table, a ``tol`` run and
+    every ``fixed_iters`` partial state of components with and without
+    the pointer jump.  The result is a local relation, and the counters
+    keep the distributed records' keys."""
+    from motive_spark.kernels import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+
+    rng = random.Random(3)
+    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(150)]
+    # duplicates, self-loops, a dangling vertex (50), a self-loop-only
+    # vertex (60) and a second component
+    pairs += pairs[:20] + [(5, 5), (9, 50), (60, 60), (70, 71), (71, 72)]
+    e = spark.createDataFrame(pairs, "src int, dst int")
+    runs = [
+        (pagerank, dict(max_iter=4, tol=None), "rank"),
+        (pagerank, dict(max_iter=100, tol=1e-6), "rank"),
+        (label_propagation, dict(iters=3), "label"),
+        (connected_components, {}, "component"),
+    ] + [
+        (connected_components, dict(fixed_iters=k, big_star=b), "component")
+        for k in (1, 2, 3)
+        for b in (True, False)
+    ]
+    for fn, kw, col in runs:
+        c_loc, c_bc = [], []
+        loc = fn(e, strategy="local", counters_out=c_loc, **kw)
+        bc = fn(e, strategy="broadcast", counters_out=c_bc, **kw)
+        what = (fn.__name__, kw)
+        assert loc.dtypes == bc.dtypes == [("id", "int"), (col, "double" if col == "rank" else "int")], what
+        assert "LocalTableScan" in loc._jdf.queryExecution().executedPlan().toString()
+        got, want = _by_id(loc, col), _by_id(bc, col)
+        assert got.keys() == want.keys(), what
+        # PageRank keeps every endpoint; the symmetric kernels drop
+        # self-loops, so the self-loop-only vertex is absent
+        assert (50 in got, 60 in got) == ((True, True) if col == "rank" else (True, False)), what
+        if col == "rank":
+            assert all(abs(got[v] - want[v]) < 1e-12 for v in want), what
+        else:
+            assert got == want, what
+        assert len(c_loc) == len(c_bc) > 0, what
+        if kw.get("tol"):
+            assert len(c_loc) < kw["max_iter"]  # stopped on the L1 probe
+        for r_loc, r_bc in zip(c_loc, c_bc):
+            assert (r_loc["strategy"], r_bc["strategy"]) == ("local", "broadcast")
+            assert {"iteration", "rows", "superstep_sec"} <= set(r_loc) & set(r_bc)
+            assert r_loc["superstep_sec"] > 0 and r_loc["iteration"] == r_bc["iteration"]
+            assert ("delta" in r_loc) == ("delta" in r_bc), what
+            if "delta" in r_loc:
+                assert math.isclose(r_loc["delta"], r_bc["delta"], rel_tol=1e-6), what
+
+    # a warm start: ids missing from it take the uniform prior
+    init = pagerank(e, max_iter=2, tol=None, strategy="broadcast").where("id % 3 != 0")
+    got, want = (
+        _by_id(pagerank(e, max_iter=3, tol=None, init_ranks=init, strategy=s), "rank")
+        for s in ("local", "broadcast")
+    )
+    assert got.keys() == want.keys() and all(abs(got[v] - want[v]) < 1e-12 for v in want)
+
+    # int and long ids widen to long, as the distributed union does
+    mixed = spark.createDataFrame(pairs, "src int, dst long")
+    for fn in (pagerank, connected_components, label_propagation):
+        assert fn(mixed, strategy="local").dtypes == fn(mixed, strategy="broadcast").dtypes
+    empty = spark.createDataFrame([], "src int, dst int")
+    for fn in (pagerank, connected_components, label_propagation):
+        loc = fn(empty, strategy="local")
+        assert loc.dtypes == fn(empty, strategy="broadcast").dtypes
+        assert loc.count() == 0
+
+
+def test_local_switch_both_sides(spark, monkeypatch, tmp_path):
+    """``auto`` takes the local regime iff the edge table has at most
+    ``LOCAL_SCORE_THRESHOLD`` rows (m - 1 vs m, spies on the numpy
+    kernels), with the forced result on each side.  An explicit
+    ``broadcast``/``csr`` never probes; an explicit ``local`` call is one
+    Spark job.  Null or non-integral ids route ``auto`` distributed and
+    make ``local`` raise; a checkpoint dir or a resume routes ``auto``
+    distributed and makes ``local`` raise."""
+    import importlib
+
+    from motive_spark.graph import local as local_mod
+
+    # the kernels package re-exports same-named FUNCTIONS; resolve the
+    # modules explicitly
+    cc_mod, lp_mod, pr_mod = (
+        importlib.import_module(f"motive_spark.kernels.{name}")
+        for name in ("components", "labelprop", "pagerank")
+    )
+    took, probes = [], []
+    for mod, name in (
+        (pr_mod, "_local_pagerank"),
+        (cc_mod, "_local_components"),
+        (lp_mod, "_local_label_propagation"),
+    ):
+        real = getattr(mod, name)
+        monkeypatch.setattr(
+            mod, name, lambda *a, _r=real, _n=name, **k: took.append(_n) or _r(*a, **k)
+        )
+    real_probe = local_mod.local_edges
+    monkeypatch.setattr(
+        local_mod, "local_edges", lambda *a, **k: probes.append(1) or real_probe(*a, **k)
+    )
+
+    pairs = random_pairs(30, 80, seed=2) + [(3, 3), (4, 5)]
+    m = len(pairs)
+    e = edges_df(spark, pairs)
+
+    def run(edges, **kw):
+        return (
+            _by_id(pr_mod.pagerank(edges, max_iter=3, tol=None, **kw), "rank"),
+            _by_id(cc_mod.connected_components(edges, **kw), "component"),
+            _by_id(lp_mod.label_propagation(edges, iters=2, **kw), "label"),
+        )
+
+    def same(a, b):
+        assert a[0].keys() == b[0].keys()
+        assert all(abs(a[0][v] - b[0][v]) < 1e-12 for v in b[0])
+        assert a[1:] == b[1:]
+
+    forced = {s: run(e, strategy=s) for s in ("local", "broadcast")}
+    same(forced["local"], forced["broadcast"])
+    for threshold, side in ((m - 1, "broadcast"), (m, "local")):
+        monkeypatch.setattr(local_mod, "LOCAL_SCORE_THRESHOLD", threshold)
+        took.clear(), probes.clear()
+        got = run(e)
+        assert len(probes) == 3, threshold
+        assert took == ([] if side == "broadcast" else [
+            "_local_pagerank", "_local_components", "_local_label_propagation"
+        ]), threshold
+        same(got, forced[side])
+
+    took.clear(), probes.clear()
+    run(e, strategy="broadcast")
+    pr_mod.pagerank(e, max_iter=2, tol=None, strategy="csr").collect()
+    cc_mod.connected_components(e, strategy="csr").collect()
+    assert probes == [] and took == []
+
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("local_call", "local_call")
+        pr_mod.pagerank(e, max_iter=3, tol=None, strategy="local")
+        assert len(sc.statusTracker().getJobIdsForGroup("local_call")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    nulls = spark.createDataFrame([(0, 1), (1, None), (2, 0)], "src long, dst long")
+    strings = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    took.clear()
+    run(nulls)
+    assert _by_id(cc_mod.connected_components(strings), "component") == {
+        "a": "a", "b": "a", "c": "a"
+    }
+    assert took == []
+    for bad in (nulls, strings):
+        with pytest.raises(ValueError, match="integral"):
+            pr_mod.pagerank(bad, strategy="local")
+
+    ckpt = str(tmp_path / "pr")
+    counters = []
+    pr_mod.pagerank(e, max_iter=2, tol=None, checkpoint_dir=ckpt, counters_out=counters)
+    pr_mod.pagerank(e, max_iter=3, tol=None, checkpoint_dir=ckpt, resume=True,
+                    counters_out=counters)
+    cc_mod.connected_components(e, checkpoint_dir=str(tmp_path / "cc"))
+    lp_mod.label_propagation(e, iters=1, checkpoint_dir=str(tmp_path / "lp"))
+    assert took == [] and [c["strategy"] for c in counters] == ["broadcast"] * 3
+    for fn in (pr_mod.pagerank, cc_mod.connected_components, lp_mod.label_propagation):
+        with pytest.raises(ValueError, match="local"):
+            fn(e, strategy="local", checkpoint_dir=str(tmp_path / "x"))
+    with pytest.raises(ValueError, match="local"):
+        pr_mod.pagerank(e, strategy="local", resume=True)
+
+
 # Spark jobs per public call (plus one trailing count) on
-# random_pairs(200, 800, seed=7), measured before these kernels moved
-# onto the shared superstep loop; the loop must not add jobs.
+# random_pairs(200, 800, seed=7).  The distributed ceilings were measured
+# before these kernels moved onto the shared superstep loop; the loop
+# must not add jobs.  ``auto`` takes the local regime on this 800-row
+# table: one probe job, plus the two jobs (AQE stages) of the trailing
+# count over the returned local relation — measured 3 at local[2], [4]
+# and [8].
 JOB_CEILINGS = {
     "pagerank_broadcast_3_fixed": 33,
-    "pagerank_tol": 47,
+    "pagerank_tol": 3,
+    "pagerank_broadcast_tol": 47,
     "pagerank_csr_checkpoint": 45,
     "components_csr": 50,
-    "components_auto": 49,
-    "label_propagation_2": 21,
+    "components_auto": 3,
+    "components_broadcast": 49,
+    "label_propagation_2": 3,
+    "label_propagation_broadcast_2": 21,
 }
 
 
@@ -267,13 +483,20 @@ def test_kernel_job_counts_do_not_grow(spark, tmp_path):
             e, max_iter=3, tol=None, strategy="broadcast"
         ),
         "pagerank_tol": lambda: pagerank(e, max_iter=3, tol=1e-2),
+        "pagerank_broadcast_tol": lambda: pagerank(
+            e, max_iter=3, tol=1e-2, strategy="broadcast"
+        ),
         "pagerank_csr_checkpoint": lambda: pagerank(
             e, max_iter=3, tol=None, strategy="csr",
             checkpoint_dir=str(tmp_path / "pr"),
         ),
         "components_csr": lambda: connected_components(e, strategy="csr"),
         "components_auto": lambda: connected_components(e),
+        "components_broadcast": lambda: connected_components(e, strategy="broadcast"),
         "label_propagation_2": lambda: label_propagation(e, iters=2),
+        "label_propagation_broadcast_2": lambda: label_propagation(
+            e, iters=2, strategy="broadcast"
+        ),
     }
     got = {}
     try:

@@ -69,6 +69,31 @@ def test_log2_primitives():
     assert float(prefix_bits(7)) == 7.0  # 2*floor(log2(8)) + 1
 
 
+def test_lg_matches_math_lgamma():
+    """``_lg`` without scipy is libm's ``math.lgamma`` / ln 2, bit for bit,
+    with numpy's result shape: a float64 scalar for scalar and 0-d input,
+    an array of the input's shape otherwise."""
+    from motive_spark.mdl import codes
+
+    def want(v):
+        return math.lgamma(float(v)) / float(np.log(2.0))
+
+    rng = random.Random(5)
+    values = [0.5, 1.0, 2.0, 3.5, 1e-3, 171.25, 1e6] + [rng.uniform(0.01, 5e4) for _ in range(50)]
+    for v in values:
+        for x in (v, int(v) or 1, np.float64(v), np.array(v)):
+            got = codes._lgamma(np.asarray(x, dtype=np.float64)) / codes._LN2
+            assert type(got) is np.float64 and got == want(float(x)), x
+            assert type(codes._lg(x)) is np.float64
+    for shape in ((len(values),), (3, 19), (0,), (2, 0)):
+        n = math.prod(shape)
+        x = np.array(values[:n], dtype=np.float64).reshape(shape)
+        got = codes._lgamma(x) / codes._LN2
+        assert got.shape == shape and got.dtype == np.float64
+        assert got.ravel().tolist() == [want(v) for v in x.ravel().tolist()]
+        assert codes._lg(x.tolist()).shape == shape
+
+
 def _score_via_spark(spark, pairs, occurrences, motif_edges, k, directed):
     """Run the batched scorer on one hand-built motif."""
     from motive_spark.mdl.score import score_motifs
@@ -384,6 +409,7 @@ def test_local_scoring_matches_distributed(spark, directed, monkeypatch):
     across sizes.  ``strategy="auto"`` is pinned on both sides of
     ``LOCAL_SCORE_THRESHOLD``, in ``score_motifs`` and in the Fibonacci
     search, by a spy on the local scorer."""
+    from motive_spark.graph import local as local_mod
     from motive_spark.mdl import score as score_mod
     from motive_spark.mdl.score import score_motifs
     from motive_spark.mdl.search import size_with_search
@@ -439,7 +465,7 @@ def test_local_scoring_matches_distributed(spark, directed, monkeypatch):
     want = searched("local")
     # auto is local iff m <= threshold
     for threshold, side, forced in ((m - 1, "distributed", dist), (m, "local", loc)):
-        monkeypatch.setattr(score_mod, "LOCAL_SCORE_THRESHOLD", threshold)
+        monkeypatch.setattr(local_mod, "LOCAL_SCORE_THRESHOLD", threshold)
         took_local.clear()
         auto = {
             (int(r["canon"]), int(r["k"])): r
@@ -593,6 +619,7 @@ def test_resolve_globals_auto_both_sides(spark, monkeypatch):
     ``LOCAL_SCORE_THRESHOLD`` raw rows; between the simple-edge count m
     and the raw row count it computes the globals distributed and still
     scores locally; below m it scores distributed."""
+    from motive_spark.graph import local as local_mod
     from motive_spark.mdl import score as score_mod
 
     pairs = random_pairs(40, 150, seed=2)
@@ -612,7 +639,7 @@ def test_resolve_globals_auto_both_sides(spark, monkeypatch):
         (rows - 1, "precompute_globals", "local"),
         (rows, "local_globals", "local"),
     ):
-        monkeypatch.setattr(score_mod, "LOCAL_SCORE_THRESHOLD", threshold)
+        monkeypatch.setattr(local_mod, "LOCAL_SCORE_THRESHOLD", threshold)
         ran.clear()
         pc, got = score_mod.resolve_globals(edges, True, True, "auto")
         score_mod.release_globals(pc)

@@ -466,7 +466,7 @@ def test_local_extractor_matches_distributed(spark, case):
 def test_extractor_auto_switch_both_sides(spark, monkeypatch):
     """``auto`` extracts locally at ``LOCAL_SCORE_THRESHOLD`` = m edge
     rows and distributed at m - 1, with the forced result on each side."""
-    from motive_spark.mdl import score
+    from motive_spark.graph import local as local_mod
     from motive_spark.motifs import MotifExtractor, extract
 
     pairs = random_pairs(40, 150, seed=9, directed=False)
@@ -484,7 +484,7 @@ def test_extractor_auto_switch_both_sides(spark, monkeypatch):
     )
     for threshold, side in ((m - 1, "distributed"), (m, "local")):
         calls.clear()
-        monkeypatch.setattr(score, "LOCAL_SCORE_THRESHOLD", threshold)
+        monkeypatch.setattr(local_mod, "LOCAL_SCORE_THRESHOLD", threshold)
         ex = MotifExtractor(edges, **kw)
         assert ex.strategy == side and len(calls) == (side == "local")
         assert _rows(ex._occurrences, ex._occurrences.columns) == want
